@@ -11,6 +11,9 @@ import org.apache.spark.sql.SparkSession
   *
   * Usage: `sbt "runMain graft.BenchExtra [passes] [queryPrefix ...]"`
   *  - `passes` (default 3): full interleaved passes; per-query MIN printed.
+  *    Each timed query prints `{"pass","q","sec","scored"}`, where
+  *    `scored` is the query's exact BM25 scorings
+  *    ([[graft.index.Searcher.scoredCount]] delta; 0 for non-BM25 queries).
   *  - `queryPrefix ...`: only queries whose name starts with one of these.
   *  - env `SPARK_GRAFT_SF_DIR` / `SPARK_GRAFT_CPUS`: as in Bench.
   *  - env `SPARK_GRAFT_EXPLAIN_DIR`: when set, each timed query's RETURNED
@@ -72,6 +75,7 @@ object BenchExtra {
     val all = (0 until passes).map { pass =>
       val p = qNames.map { case (name, fn) =>
         spark.sparkContext.setJobDescription(s"$name pass $pass")
+        val scored0 = graft.index.Searcher.scoredCount.sum()
         val (_, sec) = time {
           try {
             val df = fn(spark, sfDir)
@@ -89,7 +93,8 @@ object BenchExtra {
           }
         }
         spark.sparkContext.setJobDescription(null)
-        println(f"""{"pass":$pass,"q":"$name","sec":$sec%.3f}""")
+        val scored = graft.index.Searcher.scoredCount.sum() - scored0
+        println(f"""{"pass":$pass,"q":"$name","sec":$sec%.3f,"scored":$scored}""")
         name -> sec
       }
       println(f"""{"pass":$pass,"pass_total_sec":${p.map(_._2).sum}%.3f}""")

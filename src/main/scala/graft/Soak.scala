@@ -198,8 +198,7 @@ object Soak {
       sec * 1000
     }.sorted
     // exact scorings across the 15-query mix — the WAND pruning diagnostic
-    // (local-mode counter; compare with GRAFT_WAND_NO_MINDL=1 to see the
-    // per-block minDl bound's effect at real segment sizes)
+    // (local-mode counter)
     val scoredExact = Searcher.scoredCount.sum() - scored0
     val (andN, andSec) = t(s.and(Seq("term0000", "term0040", "term0100")).count())
     val (phraseN, phraseSec) =

@@ -35,20 +35,6 @@ object VarByte {
       v | ((b & 0x7fL) << shift)
     }
   }
-
-  def encode(values: Array[Long]): Array[Byte] = {
-    val out = new ArrayBuffer[Byte](values.length * 2)
-    var i = 0
-    while (i < values.length) { write(out, values(i)); i += 1 }
-    out.toArray
-  }
-
-  def decodeAll(bytes: Array[Byte]): Array[Long] = {
-    val out = new ArrayBuffer[Long](bytes.length)
-    val r = new Reader(bytes)
-    while (r.hasNext) out += r.read()
-    out.toArray
-  }
 }
 
 /** One compressed posting block: up to [[PostingCodec.BlockSize]] postings.
@@ -87,6 +73,14 @@ final case class DecodedBlock(
     tfs: Array[Int],
     positions: Array[Array[Int]])
 
+/** Posting-block encoder/decoder (layout in [[PBlock]]).
+  *
+  * `graft.codec` is the only module that knows the index's byte layouts:
+  * the posting block, the per-posting position stream ([[packPositions]])
+  * and the per-segment norms ([[NormsCodec]]). Builder, compactor and
+  * searcher call these functions and never write or read varbytes
+  * themselves, so a layout change is made here once.
+  */
 object PostingCodec {
   val BlockSize = 128
 
@@ -186,70 +180,47 @@ object PostingCodec {
     docs
   }
 
+  private val EmptyBytes = Array.empty[Byte]
+
+  /** Delta+varbyte pack the first `n` of `ps` (strictly ascending token
+    * offsets): first absolute, then gaps, no count prefix. The position
+    * stream of one posting as [[encodePacked]] splices it.
+    */
+  def packPositions(ps: Array[Int], n: Int): Array[Byte] = {
+    val out = new ArrayBuffer[Byte](n + 2)
+    var i = 0
+    var prev = 0
+    while (i < n) {
+      VarByte.write(out, (if (i == 0) ps(0) else ps(i) - prev).toLong)
+      prev = ps(i)
+      i += 1
+    }
+    out.toArray
+  }
+
   /** Encode one posting run (a single term within a single segment) into
     * fixed-size blocks. `docIds` must be strictly ascending; `tfs` parallel;
     * `positions(i)` (may be null/empty when positions are disabled) must be
-    * strictly ascending token offsets. `dls` (parallel document lengths, may
-    * be null) feeds each block's `minDl` WAND bound; when absent,
-    * `defaultMinDl` is stamped instead (0 = the loosest sound bound).
+    * strictly ascending token offsets, exactly `tfs(i)` of them. `dls`
+    * (parallel document lengths, may be null) feeds each block's `minDl`
+    * WAND bound; when absent, 0 (the loosest sound bound) is stamped.
     */
   def encode(
       docIds: Array[Long],
       tfs: Array[Int],
       positions: Array[Array[Int]],
       blockSize: Int = BlockSize,
-      dls: Array[Int] = null,
-      defaultMinDl: Int = 0): Array[PBlock] = {
-    val nBlocks = (docIds.length + blockSize - 1) / blockSize
-    val out = new Array[PBlock](nBlocks)
-    var b = 0
-    while (b < nBlocks) {
-      val start = b * blockSize
-      val end = math.min(start + blockSize, docIds.length)
-      val docBytes = encodeDocs(docIds, start, end)
-      val tfBuf = new ArrayBuffer[Byte](end - start)
-      val posBuf = new ArrayBuffer[Byte]()
-      // decodeBlock reads one varbyte count PER posting whenever posBytes is
-      // non-empty — so if ANY posting in this block carries positions, every
-      // position-less posting must still write an explicit 0 count, or the
-      // stream misaligns and decodes garbage
-      var blockHasPos = false
-      if (positions != null) {
-        var i0 = start
-        while (!blockHasPos && i0 < end) {
-          if (positions(i0) != null && positions(i0).nonEmpty) blockHasPos = true
-          i0 += 1
-        }
+      dls: Array[Int] = null): Array[PBlock] = {
+    val packed = if (positions == null) null else Array.tabulate(docIds.length) { i =>
+      val ps = positions(i)
+      if (ps == null || ps.isEmpty) EmptyBytes
+      else {
+        require(ps.length == tfs(i),
+          s"posting ${docIds(i)}: ${ps.length} positions but tf ${tfs(i)}")
+        packPositions(ps, ps.length)
       }
-      var maxTf = 0
-      var minDl = if (dls == null) defaultMinDl else Int.MaxValue
-      var i = start
-      while (i < end) {
-        VarByte.write(tfBuf, tfs(i).toLong)
-        if (tfs(i) > maxTf) maxTf = tfs(i)
-        if (dls != null && dls(i) < minDl) minDl = dls(i)
-        if (blockHasPos) {
-          val ps = positions(i)
-          if (ps == null || ps.isEmpty) VarByte.write(posBuf, 0L)
-          else {
-            VarByte.write(posBuf, ps.length.toLong)
-            var j = 0
-            var pprev = 0
-            while (j < ps.length) {
-              if (j == 0) VarByte.write(posBuf, ps(j).toLong)
-              else VarByte.write(posBuf, (ps(j) - pprev).toLong)
-              pprev = ps(j)
-              j += 1
-            }
-          }
-        }
-        i += 1
-      }
-      out(b) = PBlock(docIds(end - 1), maxTf, minDl, end - start,
-        docBytes, tfBuf.toArray, posBuf.toArray)
-      b += 1
     }
-    out
+    encodePacked(docIds, tfs, packed, blockSize, dls)
   }
 
   /** Encode a run whose positions are already delta+varbyte packed per
@@ -260,8 +231,8 @@ object PostingCodec {
     * the (term, segId) shuffle, so the exchange moves ~tf bytes per posting
     * instead of an unpacked int array (UnsafeRow arrays cost ~8 bytes per
     * element plus headers — measured ~10x the raw corpus bytes through the
-    * shuffle). The on-disk block format is bit-identical to [[encode]]:
-    * this just splices pre-packed streams instead of re-deriving them.
+    * shuffle). [[encode]] packs its positions and calls this: the one
+    * block-encoding loop of the format.
     */
   def encodePacked(
       docIds: Array[Long],
@@ -278,6 +249,10 @@ object PostingCodec {
       val docBytes = encodeDocs(docIds, start, end)
       val tfBuf = new ArrayBuffer[Byte](end - start)
       val posBuf = new ArrayBuffer[Byte]()
+      // decodeBlock reads one varbyte count PER posting whenever posBytes is
+      // non-empty — so if ANY posting in this block carries positions, every
+      // position-less posting must still write an explicit 0 count, or the
+      // stream misaligns and decodes garbage
       var blockHasPos = false
       if (posBytes != null) {
         var i0 = start

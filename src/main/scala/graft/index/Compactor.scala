@@ -1,9 +1,9 @@
 package graft.index
 
-import graft.codec.VarByte
+import graft.codec.{NormsCodec, PostingCodec}
+import IndexBuilder.{hadoopDelete, movePartition}
 import org.apache.spark.sql.{SparkSession}
 import org.apache.spark.sql.functions._
-import scala.collection.mutable.ArrayBuffer
 
 /** LSM wave merge / tiered compaction.
   *
@@ -107,24 +107,24 @@ object Compactor {
         // block, and never looser than the old global-min inheritance.
         val repacked =
           if (blocks.length > 1 && df < blocks.length.toLong * blockSize / 2) {
-            val d = graft.codec.PostingCodec.decodeRun(blocks.toSeq)
+            val d = PostingCodec.decodeRun(blocks.toSeq)
             val dls = new Array[Int](d.docIds.length)
             var off = 0
             blocks.foreach { b =>
               java.util.Arrays.fill(dls, off, off + b.n, b.minDl)
               off += b.n
             }
-            graft.codec.PostingCodec.encode(d.docIds, d.tfs, d.positions,
-              blockSize, dls = dls)
+            PostingCodec.encode(d.docIds, d.tfs, d.positions, blockSize, dls)
           } else blocks
         SegmentPosting(term, newWave, segId,
           df, rs.map(_.tf).sum, rs.map(_.maxTf).max, repacked)
       }
     merged.toDF().write.mode("overwrite").partitionBy("wave")
       .parquet(IndexBuilder.segmentsPath(dir) + s"/.tmpwave$newWave")
-    move(spark, IndexBuilder.segmentsPath(dir) + s"/.tmpwave$newWave/wave=$newWave",
+    movePartition(spark,
+      IndexBuilder.segmentsPath(dir) + s"/.tmpwave$newWave/wave=$newWave",
       IndexBuilder.segmentsPath(dir) + s"/wave=$newWave")
-    del(spark, IndexBuilder.segmentsPath(dir) + s"/.tmpwave$newWave")
+    hadoopDelete(spark, IndexBuilder.segmentsPath(dir) + s"/.tmpwave$newWave")
 
     // --- norms: decode + re-encode per segId (delta chains can't concat) --
     val norms = IndexBuilder.readNorms(spark, dir, waves)
@@ -133,27 +133,20 @@ object Compactor {
     val mergedNorms = norms.groupByKey(_.segId).mapGroups { (segId: Long, it: Iterator[SegmentNorms]) =>
       val rows = it.toArray
       val (docs, dls) = Searcher.decodeNorms(rows)
-      val docBuf = new ArrayBuffer[Byte]()
-      val dlBuf = new ArrayBuffer[Byte]()
+      val enc = new NormsCodec.Encoder
       var i = 0
-      var prevDoc = 0L
-      while (i < docs.length) {
-        if (i == 0) VarByte.write(docBuf, docs(i))
-        else VarByte.write(docBuf, docs(i) - prevDoc)
-        prevDoc = docs(i)
-        VarByte.write(dlBuf, dls(i).toLong)
-        i += 1
-      }
+      while (i < docs.length) { enc.add(docs(i), dls(i)); i += 1 }
       val tsMins = rows.map(_.minTs).filter(_ != 0L)
-      SegmentNorms(newWave, segId, docs.length, docBuf.toArray, dlBuf.toArray,
+      SegmentNorms(newWave, segId, enc.n, enc.docBytes, enc.dlBytes,
         rows.map(_.sumDl).sum, rows.map(_.minDocId).min, rows.map(_.maxDocId).max,
         if (tsMins.isEmpty) 0L else tsMins.min, rows.map(_.maxTs).max)
     }
     mergedNorms.toDF().write.mode("overwrite").partitionBy("wave")
       .parquet(IndexBuilder.normsPath(dir) + s"/.tmpwave$newWave")
-    move(spark, IndexBuilder.normsPath(dir) + s"/.tmpwave$newWave/wave=$newWave",
+    movePartition(spark,
+      IndexBuilder.normsPath(dir) + s"/.tmpwave$newWave/wave=$newWave",
       IndexBuilder.normsPath(dir) + s"/wave=$newWave")
-    del(spark, IndexBuilder.normsPath(dir) + s"/.tmpwave$newWave")
+    hadoopDelete(spark, IndexBuilder.normsPath(dir) + s"/.tmpwave$newWave")
 
     // --- docmeta: virtual merge (no I/O) with bounded fragmentation --------
     // The forward map is corpus-sized, and a merge changes NOTHING about its
@@ -202,28 +195,13 @@ object Compactor {
     // after a physical consolidation the whole old fragment set is dead.
     val liveDocmeta = m1.waves.flatMap(_.docmetaWaveIds).toSet
     waves.foreach { w =>
-      del(spark, IndexBuilder.segmentsPath(dir) + s"/wave=$w")
-      del(spark, IndexBuilder.normsPath(dir) + s"/wave=$w")
-      del(spark, IndexBuilder.termstatsPath(dir) + s"/wave=$w")
+      hadoopDelete(spark, IndexBuilder.segmentsPath(dir) + s"/wave=$w")
+      hadoopDelete(spark, IndexBuilder.normsPath(dir) + s"/wave=$w")
+      hadoopDelete(spark, IndexBuilder.termstatsPath(dir) + s"/wave=$w")
     }
     (mergedDmw.toSet -- liveDocmeta).foreach { w =>
-      del(spark, IndexBuilder.docmetaPath(dir) + s"/wave=$w")
+      hadoopDelete(spark, IndexBuilder.docmetaPath(dir) + s"/wave=$w")
     }
     m1
-  }
-
-  private def move(spark: SparkSession, from: String, to: String): Unit = {
-    val f = new org.apache.hadoop.fs.Path(from)
-    val t = new org.apache.hadoop.fs.Path(to)
-    val fs = f.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.mkdirs(t.getParent)
-    if (fs.exists(t)) fs.delete(t, true)
-    fs.rename(f, t)
-  }
-
-  private def del(spark: SparkSession, path: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) fs.delete(p, true)
   }
 }

@@ -1,6 +1,6 @@
 package graft.index
 
-import graft.codec.{PostingCodec, VarByte}
+import graft.codec.{NormsCodec, PostingCodec}
 import graft.text.Tokenize
 import org.apache.spark.TaskContext
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row, SparkSession}
@@ -86,18 +86,7 @@ object IndexBuilder {
       a(n) = v
       n += 1
     }
-    /** Delta+varbyte pack (first absolute, then gaps) — ascending ints. */
-    def toPacked: Array[Byte] = {
-      val out = new ArrayBuffer[Byte](n + 2)
-      var i = 0
-      var prev = 0
-      while (i < n) {
-        graft.codec.VarByte.write(out, (if (i == 0) a(0) else a(i) - prev).toLong)
-        prev = a(i)
-        i += 1
-      }
-      out.toArray
-    }
+    def toPacked: Array[Byte] = PostingCodec.packPositions(a, n)
   }
 
   private val EmptyBytes = Array.empty[Byte]
@@ -151,7 +140,7 @@ object IndexBuilder {
   def docmetaPath(dir: String) = s"$dir/docmeta"
   def termstatsPath(dir: String) = s"$dir/termstats"
 
-  private def hadoopDelete(spark: SparkSession, path: String): Unit = {
+  private[index] def hadoopDelete(spark: SparkSession, path: String): Unit = {
     val p = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (fs.exists(p)) fs.delete(p, true)
@@ -348,7 +337,7 @@ object IndexBuilder {
       sec, numDocs / sec, postings / sec)
   }
 
-  private def movePartition(spark: SparkSession, from: String, to: String): Unit = {
+  private[index] def movePartition(spark: SparkSession, from: String, to: String): Unit = {
     val f = new org.apache.hadoop.fs.Path(from)
     val t = new org.apache.hadoop.fs.Path(to)
     val fs = f.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -397,10 +386,7 @@ object IndexBuilder {
       def hasNext: Boolean = buf.hasNext
       def next(): SegmentNorms = {
         val segId = buf.head.segId
-        val docBuf = new ArrayBuffer[Byte]()
-        val dlBuf = new ArrayBuffer[Byte]()
-        var n = 0
-        var prev = 0L
+        val enc = new NormsCodec.Encoder
         var sumDl = 0L
         var minDoc = Long.MaxValue
         var maxDoc = Long.MinValue
@@ -408,18 +394,14 @@ object IndexBuilder {
         var maxTs = 0L
         while (buf.hasNext && buf.head.segId == segId) {
           val r = buf.next()
-          if (n == 0) VarByte.write(docBuf, r.docId)
-          else VarByte.write(docBuf, r.docId - prev)
-          prev = r.docId
-          VarByte.write(dlBuf, r.dl.toLong)
+          enc.add(r.docId, r.dl)
           sumDl += r.dl
           if (r.docId < minDoc) minDoc = r.docId
           if (r.docId > maxDoc) maxDoc = r.docId
           if (r.ts != 0L && (minTs == 0L || r.ts < minTs)) minTs = r.ts
           if (r.ts > maxTs) maxTs = r.ts
-          n += 1
         }
-        SegmentNorms(wave, segId, n, docBuf.toArray, dlBuf.toArray,
+        SegmentNorms(wave, segId, enc.n, enc.docBytes, enc.dlBytes,
           sumDl, minDoc, maxDoc, minTs, maxTs)
       }
     }

@@ -1,6 +1,6 @@
 package graft.index
 
-import graft.codec.{PBlock, PostingCodec, VarByte}
+import graft.codec.{NormsCodec, PBlock, PostingCodec}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -809,16 +809,12 @@ class Searcher(val spark: SparkSession, val dir: String,
 
 object Searcher {
   /** Exact BM25 scorings performed by wandSegment in this JVM — a pruning
-    * diagnostic (TimeQuery prints it to quantify how much work the
-    * block-max bounds skip). Meaningful in local mode only: on a real
+    * diagnostic (BenchExtra prints its per-query delta to quantify how much
+    * work the block-max bounds skip). Meaningful in local mode only: on a real
     * cluster each executor JVM owns its own counter and nothing collects
     * them (deliberately — a per-doc accumulator would tax the hot loop).
     */
   val scoredCount = new java.util.concurrent.atomic.LongAdder()
-
-  /** False under GRAFT_WAND_NO_MINDL=1 (see TermCursor.ub). */
-  private[index] val useMinDlBound: Boolean =
-    !sys.env.get("GRAFT_WAND_NO_MINDL").contains("1")
 
   /** Concatenate posting runs of one (term, segId) across waves (wave order
     * = ascending docIds; reference rebase invariant) and decode docIds.
@@ -921,11 +917,7 @@ object Searcher {
   private final class TermCursor(blocks: Array[PBlock], val idf: Double,
       k1: Double, b: Double, avgdl: Double) {
     private val adl = if (avgdl > 0) avgdl else 1.0
-    @inline private def ub(maxTf: Int, minDl0: Int): Double = {
-      // GRAFT_WAND_NO_MINDL=1 forces the round-2 dl-free bound — a
-      // measurement toggle so TimeQuery's `scored` counter can quantify the
-      // per-block minDl pruning gain on identical indexes
-      val minDl = if (Searcher.useMinDlBound) minDl0 else 0
+    @inline private def ub(maxTf: Int, minDl: Int): Double = {
       val m = maxTf.toDouble
       idf * (m * (k1 + 1.0)) / (m + k1 * (1.0 - b + b * (minDl / adl)))
     }
@@ -1069,6 +1061,9 @@ object Searcher {
     out.iterator
   }
 
+  /** (docIds, dls) of one segment's norms rows, concatenated in wave (=
+    * docId) order.
+    */
   def decodeNorms(rows: Array[SegmentNorms]): (Array[Long], Array[Int]) = {
     val sorted = rows.sortBy(_.wave)
     val total = sorted.map(_.n).sum
@@ -1076,16 +1071,7 @@ object Searcher {
     val dls = new Array[Int](total)
     var off = 0
     sorted.foreach { nr =>
-      val dr = new VarByte.Reader(nr.docBytes)
-      val lr = new VarByte.Reader(nr.dlBytes)
-      var i = 0
-      var prev = 0L
-      while (i < nr.n) {
-        prev = if (i == 0) dr.read() else prev + dr.read()
-        docs(off + i) = prev
-        dls(off + i) = lr.read().toInt
-        i += 1
-      }
+      NormsCodec.decode(nr.docBytes, nr.dlBytes, nr.n, docs, dls, off)
       off += nr.n
     }
     (docs, dls)

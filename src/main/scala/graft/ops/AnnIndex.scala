@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.functions.VectorFunctions.cosine_sim
+import graft.index.ParamsIO
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -29,26 +30,9 @@ object AnnIndex {
   private def dataPath(dir: String) = s"$dir/vectors"
   private def paramsPath(dir: String) = s"$dir/ann_params.json"
 
-  private def writeParams(spark: SparkSession, dir: String, p: Params): Unit = {
-    val path = new org.apache.hadoop.fs.Path(paramsPath(dir))
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(path, true)
-    out.write(
-      s"""{"dim":${p.dim},"tables":${p.tables},"planes":${p.planes},"seed":${p.seed}}"""
-        .getBytes("UTF-8"))
-    out.close()
-  }
-
   def readParams(spark: SparkSession, dir: String): Params = {
-    val path = new org.apache.hadoop.fs.Path(paramsPath(dir))
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val in = fs.open(path)
-    val txt = scala.io.Source.fromInputStream(in, "UTF-8").mkString
-    in.close()
-    def field(n: String): Long =
-      s""""$n":(-?\\d+)""".r.findFirstMatchIn(txt).get.group(1).toLong
-    Params(field("dim").toInt, field("tables").toInt, field("planes").toInt,
-      field("seed"))
+    val f = ParamsIO.read(spark, paramsPath(dir))
+    Params(f("dim").toInt, f("tables").toInt, f("planes").toInt, f("seed"))
   }
 
   /** Build the index under `dir` from (idCol LONG, vecCol ARRAY<FLOAT>). */
@@ -73,7 +57,7 @@ object AnnIndex {
         pmod(hash(col("id")), lit(splitsPerBucket)))
       .write.mode("overwrite").partitionBy("tbl", "bucket")
       .parquet(dataPath(dir))
-    writeParams(spark, dir, Params(dim, tables, planes, seed))
+    ParamsIO.write(spark, paramsPath(dir), Params(dim, tables, planes, seed))
   }
 
   /** Bucket ids within hamming distance <= radius of `bucket` over

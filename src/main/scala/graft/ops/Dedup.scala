@@ -169,6 +169,10 @@ object Dedup {
     */
   def jaccardPairs(df: DataFrame, idCol: String, textCol: String, n: Int,
       threshold: Double, stagingDir: Option[String] = None): DataFrame = {
+    // t <= 0 would make every shingle a prefix (the full quadratic self-join)
+    // and t > 1 can never match: both are caller errors, not empty results
+    require(threshold > 0.0 && threshold <= 1.0,
+      s"jaccardPairs threshold must be in (0, 1], got $threshold")
     // materialize the sorted shingle-set table once: it feeds both sides of
     // the candidate join AND the verification (at cluster scale this
     // persist is a staging-table write)

@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.functions.VectorFunctions.cosine_sim
+import graft.index.ParamsIO
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -69,26 +70,9 @@ object IvfIndex {
   private def centroidsPath(dir: String) = s"$dir/centroids"
   private def paramsPath(dir: String) = s"$dir/ivf_params.json"
 
-  private def writeParams(spark: SparkSession, dir: String, p: Params): Unit = {
-    val path = new org.apache.hadoop.fs.Path(paramsPath(dir))
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(path, true)
-    out.write(
-      s"""{"dim":${p.dim},"nlist":${p.nlist},"seed":${p.seed},"iters":${p.iters}}"""
-        .getBytes("UTF-8"))
-    out.close()
-  }
-
   def readParams(spark: SparkSession, dir: String): Params = {
-    val path = new org.apache.hadoop.fs.Path(paramsPath(dir))
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val in = fs.open(path)
-    val txt = scala.io.Source.fromInputStream(in, "UTF-8").mkString
-    in.close()
-    def field(n: String): Long =
-      s""""$n":(-?\\d+)""".r.findFirstMatchIn(txt).get.group(1).toLong
-    Params(field("dim").toInt, field("nlist").toInt, field("seed"),
-      field("iters").toInt)
+    val f = ParamsIO.read(spark, paramsPath(dir))
+    Params(f("dim").toInt, f("nlist").toInt, f("seed"), f("iters").toInt)
   }
 
   /** Freshness signature of a sidecar/layout path: file names + lengths +
@@ -258,7 +242,7 @@ object IvfIndex {
       cents.zipWithIndex
         .map { case (c, l) => (l, c.toSeq, minCos.getOrElse(l, 0.0)) }.toSeq,
       dir)
-    writeParams(spark, dir, Params(dim, nlist, seed, iters))
+    ParamsIO.write(spark, paramsPath(dir), Params(dim, nlist, seed, iters))
   }
 
   /** Incrementally add vectors to an existing index: assign with the

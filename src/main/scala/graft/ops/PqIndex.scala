@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.functions.VectorFunctions.cosine_sim
+import graft.index.ParamsIO
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -73,27 +74,10 @@ object PqIndex {
   private def codebooksPath(dir: String) = s"${pqRoot(dir)}/codebooks"
   private def paramsPath(dir: String) = s"${pqRoot(dir)}/pq_params.json"
 
-  private def writeParams(spark: SparkSession, dir: String, p: PqParams): Unit = {
-    val path = new org.apache.hadoop.fs.Path(paramsPath(dir))
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(path, true)
-    out.write((s"""{"dim":${p.dim},"m":${p.m},"ks":${p.ks},""" +
-      s""""seed":${p.seed},"iters":${p.iters},"rows":${p.rows}}""")
-      .getBytes("UTF-8"))
-    out.close()
-  }
-
   def readParams(spark: SparkSession, dir: String): PqParams = {
-    val path = new org.apache.hadoop.fs.Path(paramsPath(dir))
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val in = fs.open(path)
-    val txt = scala.io.Source.fromInputStream(in, "UTF-8").mkString
-    in.close()
-    def fieldOpt(n: String): Option[Long] =
-      s""""$n":(-?\\d+)""".r.findFirstMatchIn(txt).map(_.group(1).toLong)
-    def field(n: String): Long = fieldOpt(n).get
-    PqParams(field("dim").toInt, field("m").toInt, field("ks").toInt,
-      field("seed"), field("iters").toInt, fieldOpt("rows").getOrElse(-1L))
+    val f = ParamsIO.read(spark, paramsPath(dir))
+    PqParams(f("dim").toInt, f("m").toInt, f("ks").toInt, f("seed"),
+      f("iters").toInt, f.getOrElse("rows", -1L))
   }
 
   private val booksCache = scala.collection.concurrent.TrieMap
@@ -262,7 +246,7 @@ object PqIndex {
     // leaves no (or a stale) params file, and the row count is the count
     // the encode pass actually wrote (an observed metric on the write job,
     // not a second scan)
-    writeParams(spark, dir, PqParams(dim, m, ks, seed, iters, rows = n))
+    ParamsIO.write(spark, paramsPath(dir), PqParams(dim, m, ks, seed, iters, rows = n))
   }
 
   /** Encode + write one pass of codes; returns the row count the write
@@ -313,7 +297,7 @@ object PqIndex {
     // a crash between the code append and here fails the open-time check
     // LOUDLY (stale count < vectors) instead of silently passing
     if (p.rows >= 0)
-      writeParams(spark, dir, p.copy(rows = p.rows + n))
+      ParamsIO.write(spark, paramsPath(dir), p.copy(rows = p.rows + n))
   }
 
   /** True iff every indexed vector has a PQ code (the invariant [[topK]]

@@ -136,4 +136,47 @@ class RobustnessSpec extends SparkSpec {
     assert(s.lookup("t4999").count() == 1)
     assert(s.phrase(Seq("t0", "t1")).count() == 1)
   }
+
+  test("jaccardPairs rejects thresholds outside (0, 1]") {
+    val docs = Seq((1L, "a b c d"), (2L, "a b c e")).toDF("doc_id", "text")
+    for (t <- Seq(0.0, -0.5, 1.5, Double.NaN)) {
+      val e = intercept[IllegalArgumentException] {
+        graft.ops.Dedup.jaccardPairs(docs, "doc_id", "text", n = 2, threshold = t)
+      }
+      assert(e.getMessage.contains("threshold"), s"t=$t")
+    }
+    // both ends of the domain still run
+    assert(graft.ops.Dedup.jaccardPairs(docs, "doc_id", "text", n = 2,
+      threshold = 1.0).count() == 0)
+    assert(graft.ops.Dedup.jaccardPairs(docs, "doc_id", "text", n = 2,
+      threshold = 0.01).count() == 1)
+  }
+
+  test("vector-index params sidecars round-trip; a PQ sidecar without rows reads as -1") {
+    import graft.ops.{AnnIndex, IvfIndex, PqIndex}
+    val dir = scratch("params")
+    val ann = AnnIndex.Params(dim = 8, tables = 16, planes = 4, seed = 42L)
+    ParamsIO.write(spark, s"$dir/ann_params.json", ann)
+    assert(AnnIndex.readParams(spark, dir) == ann)
+    val ivf = IvfIndex.Params(dim = 8, nlist = 4, seed = -3L, iters = 10)
+    ParamsIO.write(spark, s"$dir/ivf_params.json", ivf)
+    assert(IvfIndex.readParams(spark, dir) == ivf)
+    // compact JSON in declaration order: the sidecar layout on disk
+    assert(new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(dir, "ivf_params.json")), "UTF-8") ==
+      """{"dim":8,"nlist":4,"seed":-3,"iters":10}""")
+    val pq = PqIndex.PqParams(dim = 8, m = 4, ks = 16, seed = 7L, iters = 5,
+      rows = 1L << 33)
+    ParamsIO.write(spark, s"$dir/pq/pq_params.json", pq)
+    assert(PqIndex.readParams(spark, dir) == pq)
+    assert(ParamsIO.read(spark, s"$dir/pq/pq_params.json") == Map("dim" -> 8L,
+      "m" -> 4L, "ks" -> 16L, "seed" -> 7L, "iters" -> 5L, "rows" -> (1L << 33)))
+    // a sidecar written before PqParams carried `rows`
+    val legacy = new org.apache.hadoop.fs.Path(s"$dir/pq/pq_params.json")
+    val out = legacy.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .create(legacy, true)
+    out.write("""{"dim":8,"m":4,"ks":16,"seed":7,"iters":5}""".getBytes("UTF-8"))
+    out.close()
+    assert(PqIndex.readParams(spark, dir) == pq.copy(rows = -1L))
+  }
 }
