@@ -15,49 +15,19 @@ import org.apache.spark.unsafe.types.UTF8String
 object IndexRegistry {
   final case class Entry(indexDir: String, idCol: String, textCol: String)
   private val entries = scala.collection.concurrent.TrieMap.empty[String, Entry]
-  // Searchers memoized per (session, index dir): constructing one reads the
-  // manifest and pins its wave set, so building a fresh one on EVERY rule
-  // application (each spark.sql over a registered corpus) pays a per-query
-  // manifest read + file-listing planning tax. Each cached entry is
-  // revalidated per lookup against (a) the OWNING SparkSession — a Searcher
-  // built on a stopped session holds DataFrames over a dead SparkContext,
-  // and tests/benches routinely stop one session and start another in the
-  // same JVM — and (b) the manifest's (mtime, size) stamp, so an append or
-  // compaction on a registered index is picked up automatically instead of
-  // silently serving a stale wave set until someone remembers invalidate().
-  private final case class CachedSearcher(spark: SparkSession,
-      stamp: (Long, Long, String), searcher: Searcher)
-  private val searchers =
-    scala.collection.concurrent.TrieMap.empty[(Int, String), CachedSearcher]
 
+  /** Registering (or clearing) releases the memoized Searchers over the
+    * affected index dirs.
+    */
   def register(tablePath: String, indexDir: String, idCol: String,
       textCol: String = "text"): Unit = {
     entries.put(normalize(tablePath), Entry(indexDir, idCol, textCol))
-    searchers.clear()
+    Searcher.release(Set(indexDir))
   }
-  def clear(): Unit = { entries.clear(); searchers.clear() }
-  /** Drop memoized searchers. Kept for API compatibility; staleness after
-    * append/compact is now detected automatically via the manifest stamp.
-    */
-  def invalidate(): Unit = searchers.clear()
-  private[index] def searcherFor(spark: SparkSession, indexDir: String): Searcher = {
-    val key = (System.identityHashCode(spark), indexDir)
-    val cur = ManifestIO.stamp(indexDir)
-    searchers.get(key) match {
-      case Some(c) if (c.spark eq spark) && c.stamp == cur => c.searcher
-      case _ =>
-        // sweep entries owned by STOPPED sessions before inserting: a
-        // replaced entry is overwritten by the put below, but a
-        // stop-one-session-start-another cycle changes the identity key, so
-        // without the sweep every dead session would pin its CachedSearcher
-        // (and the dead SparkContext behind its DataFrames) in this map for
-        // the JVM's lifetime. Insert-time is the right frequency: hits (the
-        // hot path) stay a single map read.
-        searchers.filterInPlace((_, c) => !c.spark.sparkContext.isStopped)
-        val s = new Searcher(spark, indexDir)
-        searchers.put(key, CachedSearcher(spark, cur, s))
-        s
-    }
+  def clear(): Unit = {
+    val dirs = entries.values.map(_.indexDir).toSet
+    entries.clear()
+    Searcher.release(dirs)
   }
   def lookup(paths: Seq[String]): Option[Entry] =
     paths.map(normalize).flatMap(p => entries.collectFirst {
@@ -127,7 +97,7 @@ class IndexAccessRule(spark: SparkSession) extends Rule[LogicalPlan] {
           // residual = every conjunct NOT rewritten (incl. graft_match on
           // other columns, null-literal terms, non-literal terms)
           val rewrittenSet = rewritable.map(_._1).toSet[Expression]
-          val searcher = IndexRegistry.searcherFor(spark, entry.indexDir)
+          val searcher = Searcher.open(spark, entry.indexDir)
           val joined = rewritable.map(_._2).foldLeft(child) { (acc, term) =>
             val lookupPlan = searcher.lookup(term).queryExecution.analyzed
             val docIdAttr = lookupPlan.output.head

@@ -1,6 +1,7 @@
 package graft.index
 
 import graft.codec.{NormsCodec, PBlock, PostingCodec}
+import graft.util.MetaCache
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -51,11 +52,11 @@ class Searcher(val spark: SparkSession, val dir: String,
   def visibleWaves: Seq[Int] = waves
 
   def segments: DataFrame = IndexBuilder.readSegments(spark, dir, waves)
-  def norms: Dataset[SegmentNorms] = {
-    val df = IndexBuilder.readNorms(spark, dir, waves)
-    df.select("wave", "segId", "n", "docBytes", "dlBytes",
-      "sumDl", "minDocId", "maxDocId", "minTs", "maxTs").as[SegmentNorms]
-  }
+  def norms: Dataset[SegmentNorms] = normsIn(waves)
+  private def normsIn(ws: Seq[Int]): Dataset[SegmentNorms] =
+    IndexBuilder.readNorms(spark, dir, ws).select("wave", "segId", "n",
+      "docBytes", "dlBytes", "sumDl", "minDocId", "maxDocId", "minTs", "maxTs")
+      .as[SegmentNorms]
   def docMeta: DataFrame = {
     // logical wave -> physical docmeta dirs: compaction merges the forward
     // map virtually (WaveInfo.docmetaWaves), so the visible waves' docmeta
@@ -109,11 +110,13 @@ class Searcher(val spark: SparkSession, val dir: String,
       .as[SegmentPosting]
   }
 
-  @transient private lazy val statsCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Option[TermStats]]()
-
-  @transient private lazy val touchedSegCache =
-    new java.util.concurrent.ConcurrentHashMap[Seq[String], Array[(Int, Long)]]()
+  // per instance, so a new Searcher starts empty; its wave set is pinned at
+  // construction, so the stamp is constant
+  @transient private lazy val statsMemo =
+    new MetaCache[String, Unit, Option[TermStats]]
+  // distinct (waves, segIds) per sorted term set; None = too wide to prune
+  @transient private lazy val touchedMemo =
+    new MetaCache[Seq[String], Unit, Option[(Array[Int], Array[Long])]]
 
   /** Global stats for query terms — a driver-side lookup of index *metadata*
     * (few rows, term pushdown into each wave's term-sorted stats file),
@@ -121,20 +124,23 @@ class Searcher(val spark: SparkSession, val dir: String,
     * (≙ the reference's lazily-cached posting handles, block.rs:279-292).
     * Stats are stored PER WAVE (appends never rewrite committed stats);
     * the per-term aggregate over visible waves happens here, over O(waves)
-    * rows per term.
+    * rows per term. The result is built from the memo hits plus the batch
+    * just fetched, never re-read from the memo, which may have evicted
+    * part of a batch wider than its bound.
     */
   def termStats(terms: Seq[String]): Map[String, TermStats] = {
-    val missing = terms.filterNot(statsCache.containsKey)
-    if (missing.nonEmpty) {
-      val fetched = IndexBuilder.readTermStats(spark, dir, waves)
+    val hits = terms.flatMap(t => statsMemo.peek(t, ()).map(t -> _)).toMap
+    val missing = terms.filterNot(hits.contains)
+    val fetched =
+      if (missing.isEmpty) Map.empty[String, TermStats]
+      else IndexBuilder.readTermStats(spark, dir, waves)
         .where(col("term").isin(missing: _*))
         .groupBy(col("term"))
         .agg(sum(col("df")).as("df"), sum(col("tf")).as("tf"),
           max(col("maxTf")).as("maxTf"))
         .as[TermStats].collect().map(t => t.term -> t).toMap
-      missing.foreach(t => statsCache.put(t, fetched.get(t)))
-    }
-    terms.flatMap(t => statsCache.get(t).map(t -> _)).toMap
+    missing.foreach(t => statsMemo.put(t, (), fetched.get(t)))
+    hits.collect { case (t, Some(st)) => t -> st } ++ fetched
   }
 
   private def emptyDocIds: DataFrame =
@@ -608,6 +614,7 @@ class Searcher(val spark: SparkSession, val dir: String,
     */
   def suggest(p: String, n: Int): DataFrame = {
     require(p.nonEmpty, "empty prefix")
+    require(n > 0, "n must be positive")
     postingsWhere(col("term").startsWith(p))
       .groupBy(col("term"))
       .agg(sum(col("df")).cast("long").as("df"))
@@ -659,6 +666,7 @@ class Searcher(val spark: SparkSession, val dir: String,
   def facets(baseTerms: Seq[String], n: Int,
       broadcastMatched: Boolean = true): DataFrame = {
     require(baseTerms.nonEmpty, "facets needs a base query")
+    require(n > 0, "n must be positive")
     val matchedRaw = and(baseTerms).select(col("docId"))
     val matched = if (broadcastMatched) broadcast(matchedRaw) else matchedRaw
     val inverted = segments
@@ -741,17 +749,20 @@ class Searcher(val spark: SparkSession, val dir: String,
     * exclusion can never shrink the result below k.
     */
   def moreLikeThis(seedTerms: Seq[String], excludeDocId: Long, k: Int,
-      params: Bm25Params = Bm25Params()): DataFrame =
+      params: Bm25Params = Bm25Params()): DataFrame = {
+    require(k > 0, "k must be positive")
     bm25(seedTerms, k + 1, params)
       .where(col("docId") =!= excludeDocId)
       .orderBy(col("score").desc, col("docId").asc)
       .limit(k)
+  }
 
   /** BM25 top-k with per-segment block-max WAND pruning and a global
     * (score desc, docId asc) selection. Returns (docId, score) with exact
     * double scores.
     */
   def bm25(terms: Seq[String], k: Int, params: Bm25Params = Bm25Params()): DataFrame = {
+    require(k > 0, "k must be positive")
     val qTerms = terms.distinct.toArray
     val stats = termStats(qTerms.toSeq)
     val present = qTerms.filter(stats.contains)
@@ -775,24 +786,21 @@ class Searcher(val spark: SparkSession, val dir: String,
     // queries fall back to the full scan, which they genuinely need.
     val expectedDocs = present.map(t => stats(t).df).sum
     val segLimit = 4096
-    val prunedNorms =
-      if (expectedDocs / math.max(1, manifest.docsPerSegment) < segLimit) {
+    val touched =
+      if (expectedDocs / math.max(1, manifest.docsPerSegment) >= segLimit) None
+      else touchedMemo.get(presentSeq.sorted, ()) {
         // memoized per term set: index metadata like termStats — the
         // rounded-tie widening loop (and q24/q46 re-running a q06-shaped
         // search) re-collected the same touched-segment set per fetch
-        val touched = touchedSegCache.computeIfAbsent(presentSeq.sorted, _ =>
-          postings(presentSeq)
-            .select("wave", "segId").distinct().limit(segLimit + 1).collect()
-            .map(r => (r.getInt(0), r.getLong(1))))
-        if (touched.length <= segLimit) {
-          val segIds = touched.map(_._2).distinct.toSeq
-          val waves2 = touched.map(_._1).distinct.toSeq
-          IndexBuilder.readNorms(spark, dir, waves2.intersect(waves))
-            .where(col("segId").isin(segIds: _*))
-            .select("wave", "segId", "n", "docBytes", "dlBytes",
-              "sumDl", "minDocId", "maxDocId", "minTs", "maxTs").as[SegmentNorms]
-        } else norms
-      } else norms
+        val rows = postings(presentSeq)
+          .select("wave", "segId").distinct().limit(segLimit + 1).collect()
+        if (rows.length > segLimit) None
+        else Some((rows.map(_.getInt(0)).distinct, rows.map(_.getLong(1)).distinct))
+      }
+    val prunedNorms = touched.fold(norms) { case (touchedWaves, segIds) =>
+      normsIn(touchedWaves.toSeq.intersect(waves))
+        .where(col("segId").isin(segIds.toSeq: _*))
+    }
     val scored = postings(presentSeq)
       .groupByKey(sp => (sp.wave, sp.segId))
       .cogroup(prunedNorms.groupByKey(nr => (nr.wave, nr.segId))) {
@@ -808,6 +816,27 @@ class Searcher(val spark: SparkSession, val dir: String,
 }
 
 object Searcher {
+  private val opened =
+    new MetaCache[(SparkSession, String), (Long, Long, String), Searcher]
+
+  /** The memoized Searcher over `dir` for this session: a fresh one per
+    * query pays a manifest read plus term-stats jobs the last query already
+    * ran. Stamped by `ManifestIO.stamp`, so the next open after an append
+    * or compaction sees it; keyed by session, since a Searcher on a stopped
+    * session holds DataFrames over a dead SparkContext.
+    */
+  def open(spark: SparkSession, dir: String): Searcher =
+    opened.get((spark, dir), ManifestIO.stamp(dir)) {
+      // a stopped session would pin its Searchers (and SparkContext) until
+      // evicted; sweeping on a miss keeps hits a single lookup
+      opened.removeWhere((k, _) => k._1.sparkContext.isStopped)
+      new Searcher(spark, dir)
+    }
+
+  /** Release the memoized Searchers over `dirs`, in every session. */
+  private[index] def release(dirs: Set[String]): Unit =
+    opened.removeWhere((k, _) => dirs.contains(k._2))
+
   /** Exact BM25 scorings performed by wandSegment in this JVM — a pruning
     * diagnostic (BenchExtra prints its per-query delta to quantify how much
     * work the block-max bounds skip). Meaningful in local mode only: on a real
@@ -841,7 +870,6 @@ object Searcher {
     (d.docIds, d.tfs, d.positions)
   }
 
-  /** K-way sorted intersection with galloping advance on the smallest list. */
   /** Min-gap existence test over two SORTED position arrays.
     * ordered: some pb(j) - pa(i) in [1, k]; unordered: some |pa(i) - pb(j)|
     * <= k. Two-pointer merge walk, O(|pa| + |pb|), no pair materialization.
@@ -862,6 +890,7 @@ object Searcher {
     false
   }
 
+  /** K-way sorted intersection with galloping advance on the smallest list. */
   def intersect(lists: Array[Array[Long]]): Array[Long] = {
     if (lists.isEmpty) return Array.empty
     if (lists.exists(_.isEmpty)) return Array.empty

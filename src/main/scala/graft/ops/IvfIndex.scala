@@ -2,6 +2,7 @@ package graft.ops
 
 import graft.functions.VectorFunctions.cosine_sim
 import graft.index.ParamsIO
+import graft.util.MetaCache
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -75,37 +76,22 @@ object IvfIndex {
     Params(f("dim").toInt, f("nlist").toInt, f("seed"), f("iters").toInt)
   }
 
-  /** Freshness signature of a sidecar/layout path: file names + lengths +
-    * mtimes. A driver-side FS listing — no Spark job — used to key the
-    * per-JVM metadata caches below so a rewrite (append folds the per-list
-    * minCos) invalidates naturally.
-    */
-  private[ops] def pathSig(spark: SparkSession, path: String): String = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) "absent"
-    else fs.listStatus(p).map(st =>
-        s"${st.getPath.getName}:${st.getLen}:${st.getModificationTime}")
-      .sorted.mkString(",")
-  }
-
-  private val listsCache =
-    scala.collection.concurrent.TrieMap.empty[(String, String), Array[ListInfo]]
+  private[graft] val listsCache = new MetaCache[String, String, Array[ListInfo]]
 
   /** (list asc) -> centroid + widest-member-angle cosine, from the
-    * persisted sidecar. Memoized per (dir, sidecar signature): the sidecar
-    * is `nlist` rows of INDEX METADATA (the quantizer), and every query
-    * against an unchanged index would otherwise pay one Spark collect job
-    * just to re-read it — the same metadata-memo discipline as
-    * `Searcher.termStats`. An append rewrites the sidecar, changing the
-    * signature, so staleness is impossible.
+    * persisted sidecar. Memoized per dir, stamped by the sidecar's
+    * [[MetaCache.pathSig]]: the sidecar is `nlist` rows of INDEX METADATA
+    * (the quantizer), and every query against an unchanged index would
+    * otherwise pay one Spark collect job just to re-read it. An append
+    * rewrites the sidecar, changing the stamp, so staleness is impossible.
     */
   def readLists(spark: SparkSession, dir: String): Array[ListInfo] =
-    listsCache.getOrElseUpdate((dir, pathSig(spark, centroidsPath(dir))),
+    listsCache.get(dir, MetaCache.pathSig(spark, centroidsPath(dir))) {
       spark.read.parquet(centroidsPath(dir))
         .orderBy("list")
         .collect()
-        .map(r => ListInfo(r.getInt(0), r.getSeq[Float](1).toArray, r.getDouble(2))))
+        .map(r => ListInfo(r.getInt(0), r.getSeq[Float](1).toArray, r.getDouble(2)))
+    }
 
   private[graft] def cosineTo(v: IndexedSeq[Float], c: Array[Float]): Double = {
     var dot = 0.0; var nv = 0.0; var nc = 0.0

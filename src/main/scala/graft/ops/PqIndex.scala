@@ -2,6 +2,7 @@ package graft.ops
 
 import graft.functions.VectorFunctions.cosine_sim
 import graft.index.ParamsIO
+import graft.util.MetaCache
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -80,30 +81,28 @@ object PqIndex {
       f("iters").toInt, f.getOrElse("rows", -1L))
   }
 
-  private val booksCache = scala.collection.concurrent.TrieMap
-    .empty[(String, String), Array[Array[Array[Float]]]]
-  private val completenessCache =
-    scala.collection.concurrent.TrieMap.empty[(String, String), Boolean]
+  private[graft] val booksCache =
+    new MetaCache[String, String, Array[Array[Array[Float]]]]
+  private[graft] val completenessCache = new MetaCache[String, String, Unit]
 
   /** codebooks(sub)(code) = codeword (dim/m floats). A subspace may hold
     * FEWER than `ks` codewords (the seeded init dedups coincident
     * subvectors), so each book is sized from the stored codes. Memoized per
-    * (dir, codebook-file signature) — index metadata, re-read only when the
-    * sidecar is rewritten (same discipline as [[IvfIndex.readLists]]).
+    * dir, stamped by the codebook files' [[MetaCache.pathSig]] — index
+    * metadata, re-read only when the sidecar is rewritten.
     */
   def readCodebooks(spark: SparkSession, dir: String,
       p: PqParams): Array[Array[Array[Float]]] =
-    booksCache.getOrElseUpdate(
-      (dir, IvfIndex.pathSig(spark, codebooksPath(dir))), {
-        val rows = spark.read.parquet(codebooksPath(dir)).collect()
-        val bySub = rows.groupBy(_.getInt(0))
-        Array.tabulate(p.m) { s =>
-          val rs = bySub.getOrElse(s, Array.empty)
-          val book = new Array[Array[Float]](rs.map(_.getInt(1)).max + 1)
-          rs.foreach(r => book(r.getInt(1)) = r.getSeq[Float](2).toArray)
-          book
-        }
-      })
+    booksCache.get(dir, MetaCache.pathSig(spark, codebooksPath(dir))) {
+      val rows = spark.read.parquet(codebooksPath(dir)).collect()
+      val bySub = rows.groupBy(_.getInt(0))
+      Array.tabulate(p.m) { s =>
+        val rs = bySub.getOrElse(s, Array.empty)
+        val book = new Array[Array[Float]](rs.map(_.getInt(1)).max + 1)
+        rs.foreach(r => book(r.getInt(1)) = r.getSeq[Float](2).toArray)
+        book
+      }
+    }
 
   private[graft] def normalize(v: IndexedSeq[Float], dim: Int): Option[Array[Float]] = {
     if (v == null || v.length != dim) return None
@@ -328,22 +327,20 @@ object PqIndex {
     val p = readParams(spark, dir)
     // completeness gate at open (PqParams scaladoc): the count job is
     // parquet-metadata-only (row-group stats, no column IO). Memoized per
-    // layout signature: an UNCHANGED layout re-verifies for free, a rewrite
-    // or append changes the file listing and re-runs the count — exactness
-    // still never rests on caller discipline.
-    if (p.rows >= 0) {
-      val gateKey = (dir, p.rows + "|" +
-        IvfIndex.pathSig(spark, s"$dir/vectors") + "|" +
-        IvfIndex.pathSig(spark, codesPath(dir)))
-      completenessCache.getOrElseUpdate(gateKey, {
+    // dir, stamped by the layout's signature: an UNCHANGED layout
+    // re-verifies for free, a rewrite or append changes the file listing
+    // and re-runs the count — exactness still never rests on caller
+    // discipline.
+    if (p.rows >= 0)
+      completenessCache.get(dir, s"${p.rows}|" +
+          MetaCache.pathSig(spark, s"$dir/vectors") + "|" +
+          MetaCache.pathSig(spark, codesPath(dir))) {
         val nVec = IvfIndex.vectors(spark, dir).count()
         require(nVec == p.rows,
           s"PQ sidecar incomplete under $dir: index holds $nVec vectors but " +
             s"the sidecar encoded ${p.rows} — run PqIndex.append with every " +
             "IvfIndex.append batch (or PqIndex.build to re-encode)")
-        true
-      }): Unit
-    }
+      }
     val books = readCodebooks(spark, dir, p)
     val lists = IvfIndex.readLists(spark, dir)
     val qv = queryVec.toIndexedSeq

@@ -179,4 +179,27 @@ class RobustnessSpec extends SparkSpec {
     out.close()
     assert(PqIndex.readParams(spark, dir) == pq.copy(rows = -1L))
   }
+
+  test("top-k and top-n search operators reject a non-positive k or n") {
+    val dir = scratch("domains")
+    IndexBuilder.build(spark,
+      (0L until 40L).map(i => (i, i.toString, s"alpha beta${i % 3}"))
+        .toDF("docId", "key", "text"), dir)
+    val s = new Searcher(spark, dir)
+    for (v <- Seq(0, -1)) {
+      def rejects(param: String)(run: => Any): Unit = {
+        val e = intercept[IllegalArgumentException](run)
+        assert(e.getMessage.contains(s"$param must be positive"), s"$param=$v")
+      }
+      rejects("k")(s.bm25(Seq("alpha"), v))
+      rejects("k")(s.moreLikeThis(Seq("alpha"), 0L, v))
+      rejects("n")(s.suggest("b", v))
+      rejects("n")(s.facets(Seq("alpha"), v))
+    }
+    // the smallest valid value still answers
+    assert(s.bm25(Seq("alpha"), 1).count() == 1)
+    assert(s.moreLikeThis(Seq("alpha"), 0L, 1).count() == 1)
+    assert(s.suggest("b", 1).count() == 1)
+    assert(s.facets(Seq("alpha"), 1).count() == 1)
+  }
 }
