@@ -141,18 +141,13 @@ object SparkEntry {
       .agg(sum("df0").as("df"), sum("tf0").as("tf"))
   }
 
-  /** Top-k under the oracle's (round(score,4) DESC, doc_id ASC) order.
+  /** Top-k under the oracle's (round(score,4) DESC, doc_id ASC) order —
+    * the widening rounded-tie fetch shared by the q06/q15/q16/q24 oracle
+    * shims.
     *
     * The engine ranks by exact score; the oracle ranks by the rounded one,
-    * so docs separated by < 5e-5 in exact score can swap ranks. A fixed
-    * +slack fetch fails if more than `slack` docs tie at the rounded
-    * boundary — instead, fetch until the LOWEST fetched rounded score drops
-    * strictly below the k-th rounded score (rounding is monotone, so every
-    * unfetched doc then rounds strictly lower and cannot enter the top-k),
-    * or until the match set is exhausted.
-    */
-  /** Widening rounded-tie top-k (shared by q06/q15/q16/q24 oracle shims):
-    * `fetch(n)` returns the top n (id, roundedScore) rows already ordered
+    * so docs separated by < 5e-5 in exact score can swap ranks. `fetch(n)`
+    * returns the top n (id, roundedScore) rows already ordered
     * (roundedScore desc, id asc). Keep the top k only when the k-th rounded
     * score strictly exceeds the LOWEST fetched one (rounding is monotone, so
     * every unfetched row then rounds strictly lower and cannot enter the

@@ -168,8 +168,7 @@ object Compactor {
     val mergedDmw = olds.flatMap(_.docmetaWaveIds).distinct.sorted.toList
     val physicalDocmeta = mergedDmw.length > maxDocmetaFragments
     if (physicalDocmeta)
-      spark.read.parquet(IndexBuilder.docmetaPath(dir))
-        .where(col("wave").isin(mergedDmw: _*)).drop("wave")
+      IndexBuilder.readDocMeta(spark, dir, mergedDmw)
         .repartitionByRange(col("docId")).sortWithinPartitions("docId")
         .write.mode("overwrite")
         .parquet(IndexBuilder.docmetaPath(dir) + s"/wave=$newWave")

@@ -450,30 +450,47 @@ object IndexBuilder {
     }
   }
 
-  def readTermStats(spark: SparkSession, dir: String, waves: Seq[Int]): DataFrame = {
-    val df = spark.read.parquet(termstatsPath(dir))
-    df.where(col("wave").isin(waves: _*))
-  }
+  /** Declared read schema of an index table: the row type's fields as the
+    * files store them, plus the `wave` INT partition column. Declaring it
+    * means resolving a table never runs Parquet's footer-reading
+    * schema-inference job.
+    */
+  private def tableSchema[T <: Product: scala.reflect.runtime.universe.TypeTag]: StructType =
+    StructType(Encoders.product[T].schema.filterNot(_.name == "wave") :+
+      StructField("wave", IntegerType))
 
-  private[index] def deleteWaveTermStats(spark: SparkSession, dir: String,
-      wave: Int): Unit =
-    hadoopDelete(spark, termstatsPath(dir) + s"/wave=$wave")
+  val SegmentsSchema: StructType = tableSchema[SegmentPosting]
+  val NormsSchema: StructType = tableSchema[SegmentNorms]
+  val TermStatsSchema: StructType = tableSchema[TermStats]
+  val DocMetaSchema: StructType = tableSchema[DocMeta]
+
+  /** The `wave=N` dirs of `waves` under `root`, read with `schema` and
+    * filtered to those waves (a PartitionFilter in the scan). Only the
+    * named dirs are listed, so a missing one fails here, at resolution,
+    * and a file deleted after resolution fails the scan — never an
+    * empty result. No waves gives an empty frame.
+    */
+  private def readWaves(spark: SparkSession, root: String, schema: StructType,
+      waves: Seq[Int]): DataFrame =
+    if (waves.isEmpty)
+      spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
+    else spark.read.schema(schema).option("basePath", root)
+      .parquet(waves.distinct.map(w => s"$root/wave=$w"): _*)
+      .where(col("wave").isin(waves: _*))
+
+  def readTermStats(spark: SparkSession, dir: String, waves: Seq[Int]): DataFrame =
+    readWaves(spark, termstatsPath(dir), TermStatsSchema, waves)
 
   /** Committed-waves segment scan (wave is a partition column -> pruning). */
-  def readSegments(spark: SparkSession, dir: String, waves: Seq[Int]): DataFrame = {
-    val df = spark.read.parquet(segmentsPath(dir))
-    df.where(col("wave").isin(waves: _*))
-  }
+  def readSegments(spark: SparkSession, dir: String, waves: Seq[Int]): DataFrame =
+    readWaves(spark, segmentsPath(dir), SegmentsSchema, waves)
 
-  def readNorms(spark: SparkSession, dir: String, waves: Seq[Int]): DataFrame = {
-    val df = spark.read.parquet(normsPath(dir))
-    df.where(col("wave").isin(waves: _*))
-  }
+  def readNorms(spark: SparkSession, dir: String, waves: Seq[Int]): DataFrame =
+    readWaves(spark, normsPath(dir), NormsSchema, waves)
 
-  def readDocMeta(spark: SparkSession, dir: String, waves: Seq[Int]): DataFrame = {
-    val df = spark.read.parquet(docmetaPath(dir))
-    df.where(col("wave").isin(waves: _*)).drop("wave")
-  }
+  /** `waves` are PHYSICAL docmeta dirs ([[WaveInfo.docmetaWaveIds]]). */
+  def readDocMeta(spark: SparkSession, dir: String, waves: Seq[Int]): DataFrame =
+    readWaves(spark, docmetaPath(dir), DocMetaSchema, waves).drop("wave")
 
   // -------------------------------------------------------------------------
   // Deterministic docID assignment without zipWithIndex (north_star):

@@ -21,6 +21,15 @@ final case class Bm25Params(k1: Double = 1.2, b: Double = 0.75)
   * postings decode happens in executors, grouped per segment so every
   * (wave, segId) docID space is intersected/scored locally and only
   * per-segment results cross the wire.
+  *
+  * Each of the four tables (segments, norms, termstats, docmeta) is
+  * resolved once per Searcher, on first use, with a declared schema
+  * (IndexBuilder.SegmentsSchema etc.), so a query neither re-lists the
+  * index nor runs Parquet's schema-inference job; every query's plan
+  * derives from these pinned relations. They list only the visible waves'
+  * `wave=N` dirs, so a snapshot that a later compaction deleted fails
+  * loudly — at resolution or at scan — instead of answering empty:
+  * reopen with [[Searcher.open]] after a compaction.
   */
 class Searcher(val spark: SparkSession, val dir: String,
     timeRange: Option[(Long, Long)] = None) extends Serializable {
@@ -51,20 +60,20 @@ class Searcher(val spark: SparkSession, val dir: String,
   /** Waves visible to this searcher (for pruning assertions/metrics). */
   def visibleWaves: Seq[Int] = waves
 
-  def segments: DataFrame = IndexBuilder.readSegments(spark, dir, waves)
+  @transient lazy val segments: DataFrame = IndexBuilder.readSegments(spark, dir, waves)
+  @transient private lazy val normsRel = IndexBuilder.readNorms(spark, dir, waves)
+  @transient private lazy val termStatsRel = IndexBuilder.readTermStats(spark, dir, waves)
+  // logical wave -> physical docmeta dirs: compaction merges the forward
+  // map virtually (WaveInfo.docmetaWaves), so the visible waves' docmeta
+  // may live under the pre-merge wave=N dirs
+  @transient lazy val docMeta: DataFrame = IndexBuilder.readDocMeta(spark, dir,
+    manifest.waves.filter(w => waves.contains(w.wave)).flatMap(_.docmetaWaveIds).distinct)
+
   def norms: Dataset[SegmentNorms] = normsIn(waves)
   private def normsIn(ws: Seq[Int]): Dataset[SegmentNorms] =
-    IndexBuilder.readNorms(spark, dir, ws).select("wave", "segId", "n",
+    normsRel.where(col("wave").isin(ws: _*)).select("wave", "segId", "n",
       "docBytes", "dlBytes", "sumDl", "minDocId", "maxDocId", "minTs", "maxTs")
       .as[SegmentNorms]
-  def docMeta: DataFrame = {
-    // logical wave -> physical docmeta dirs: compaction merges the forward
-    // map virtually (WaveInfo.docmetaWaves), so the visible waves' docmeta
-    // may live under the pre-merge wave=N dirs
-    val physical = manifest.waves.filter(w => waves.contains(w.wave))
-      .flatMap(_.docmetaWaveIds).distinct
-    IndexBuilder.readDocMeta(spark, dir, physical)
-  }
 
   /** Segment-level time pruning for a time-restricted view: segIds whose
     * per-segment [minTs, maxTs] (norms metadata the build already stamps)
@@ -80,7 +89,7 @@ class Searcher(val spark: SparkSession, val dir: String,
   @transient private lazy val timeSegIds: Option[Seq[Long]] =
     timeRange.flatMap { case (from, to) =>
       val segLimit = 4096
-      val rows = IndexBuilder.readNorms(spark, dir, waves)
+      val rows = normsRel
         .where((col("minTs") === 0L && col("maxTs") === 0L) ||
           (col("minTs") <= to && col("maxTs") >= from))
         .select("segId").distinct().limit(segLimit + 1).collect()
@@ -133,7 +142,7 @@ class Searcher(val spark: SparkSession, val dir: String,
     val missing = terms.filterNot(hits.contains)
     val fetched =
       if (missing.isEmpty) Map.empty[String, TermStats]
-      else IndexBuilder.readTermStats(spark, dir, waves)
+      else termStatsRel
         .where(col("term").isin(missing: _*))
         .groupBy(col("term"))
         .agg(sum(col("df")).as("df"), sum(col("tf")).as("tf"),
@@ -1024,7 +1033,7 @@ object Searcher {
 
     def theta: Double = if (heap.size() < k) -1.0 else heap.peek()._2
 
-    val active = scala.collection.mutable.ArrayBuffer(cursors.filter(!_.exhausted): _*)
+    val active = scala.collection.mutable.ArrayBuffer.from(cursors.iterator.filter(!_.exhausted))
     while (active.nonEmpty) {
       // WAND pivot: sort active by current docId, accumulate maxScore
       val sortedCur = active.sortBy(_.docId)
