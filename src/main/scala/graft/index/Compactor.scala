@@ -1,7 +1,7 @@
 package graft.index
 
 import graft.codec.{NormsCodec, PostingCodec}
-import IndexBuilder.{hadoopDelete, movePartition}
+import IndexBuilder.{hadoopDelete, writeWave}
 import org.apache.spark.sql.{SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -65,11 +65,11 @@ object Compactor {
     val byId = m0.waves.map(w => w.wave -> w).toMap
     require(waves.forall(byId.contains), s"unknown waves: $waves")
     // the selected waves' docId span must not interleave with any surviving
-    // wave: the merged wave gets id max+1, and every reader (mergeRunDocs /
-    // mergeRunFull / blocks-concat here) relies on "higher wave id => higher
-    // docId range" to concatenate runs without re-sorting. A non-contiguous
-    // merge (e.g. oldest+newest around a surviving middle wave) would break
-    // that invariant silently.
+    // wave: the merged wave gets id max+1, and every reader of a run split
+    // across waves (Searcher.runBlocks, used here too) relies on "higher
+    // wave id => higher docId range" to concatenate runs without
+    // re-sorting. A non-contiguous merge (e.g. oldest+newest around a
+    // surviving middle wave) would break that invariant silently.
     locally {
       val sel = waves.map(byId).filter(_.numDocs > 0)
       if (sel.nonEmpty) {
@@ -94,8 +94,8 @@ object Compactor {
     val merged = segs.groupByKey(sp => (sp.term, sp.segId))
       .mapGroups { (key: (String, Long), it: Iterator[SegmentPosting]) =>
         val (term, segId) = key
-        val rs = it.toArray.sortBy(_.wave)
-        val blocks = rs.flatMap(_.blocks)
+        val rs = it.toSeq
+        val blocks = Searcher.runBlocks(rs)
         val df = rs.map(_.df).sum
         // repack when wave boundaries left the run fragmented (avg fill
         // below half a block): decode+re-encode restores full blocks so
@@ -107,7 +107,7 @@ object Compactor {
         // block, and never looser than the old global-min inheritance.
         val repacked =
           if (blocks.length > 1 && df < blocks.length.toLong * blockSize / 2) {
-            val d = PostingCodec.decodeRun(blocks.toSeq)
+            val d = PostingCodec.decodeRun(blocks)
             val dls = new Array[Int](d.docIds.length)
             var off = 0
             blocks.foreach { b =>
@@ -115,16 +115,11 @@ object Compactor {
               off += b.n
             }
             PostingCodec.encode(d.docIds, d.tfs, d.positions, blockSize, dls)
-          } else blocks
+          } else blocks.toArray
         SegmentPosting(term, newWave, segId,
           df, rs.map(_.tf).sum, rs.map(_.maxTf).max, repacked)
       }
-    merged.toDF().write.mode("overwrite").partitionBy("wave")
-      .parquet(IndexBuilder.segmentsPath(dir) + s"/.tmpwave$newWave")
-    movePartition(spark,
-      IndexBuilder.segmentsPath(dir) + s"/.tmpwave$newWave/wave=$newWave",
-      IndexBuilder.segmentsPath(dir) + s"/wave=$newWave")
-    hadoopDelete(spark, IndexBuilder.segmentsPath(dir) + s"/.tmpwave$newWave")
+    writeWave(merged.toDF(), IndexBuilder.segmentsPath(dir), newWave)
 
     // --- norms: decode + re-encode per segId (delta chains can't concat) --
     val norms = IndexBuilder.readNorms(spark, dir, waves)
@@ -141,12 +136,7 @@ object Compactor {
         rows.map(_.sumDl).sum, rows.map(_.minDocId).min, rows.map(_.maxDocId).max,
         if (tsMins.isEmpty) 0L else tsMins.min, rows.map(_.maxTs).max)
     }
-    mergedNorms.toDF().write.mode("overwrite").partitionBy("wave")
-      .parquet(IndexBuilder.normsPath(dir) + s"/.tmpwave$newWave")
-    movePartition(spark,
-      IndexBuilder.normsPath(dir) + s"/.tmpwave$newWave/wave=$newWave",
-      IndexBuilder.normsPath(dir) + s"/wave=$newWave")
-    hadoopDelete(spark, IndexBuilder.normsPath(dir) + s"/.tmpwave$newWave")
+    writeWave(mergedNorms.toDF(), IndexBuilder.normsPath(dir), newWave)
 
     // --- docmeta: virtual merge (no I/O) with bounded fragmentation --------
     // The forward map is corpus-sized, and a merge changes NOTHING about its
@@ -168,10 +158,9 @@ object Compactor {
     val mergedDmw = olds.flatMap(_.docmetaWaveIds).distinct.sorted.toList
     val physicalDocmeta = mergedDmw.length > maxDocmetaFragments
     if (physicalDocmeta)
-      IndexBuilder.readDocMeta(spark, dir, mergedDmw)
-        .repartitionByRange(col("docId")).sortWithinPartitions("docId")
-        .write.mode("overwrite")
-        .parquet(IndexBuilder.docmetaPath(dir) + s"/wave=$newWave")
+      writeWave(IndexBuilder.readDocMeta(spark, dir, mergedDmw)
+        .repartitionByRange(col("docId")).sortWithinPartitions("docId"),
+        IndexBuilder.docmetaPath(dir), newWave)
 
     // --- commit ------------------------------------------------------------
     val sec = (System.nanoTime() - t0) / 1e9
@@ -192,14 +181,10 @@ object Compactor {
     // old wave data no longer referenced; reclaim. Docmeta dirs are kept
     // alive while any committed wave still references them (virtual merge);
     // after a physical consolidation the whole old fragment set is dead.
-    val liveDocmeta = m1.waves.flatMap(_.docmetaWaveIds).toSet
-    waves.foreach { w =>
-      hadoopDelete(spark, IndexBuilder.segmentsPath(dir) + s"/wave=$w")
-      hadoopDelete(spark, IndexBuilder.normsPath(dir) + s"/wave=$w")
-      hadoopDelete(spark, IndexBuilder.termstatsPath(dir) + s"/wave=$w")
-    }
-    (mergedDmw.toSet -- liveDocmeta).foreach { w =>
-      hadoopDelete(spark, IndexBuilder.docmetaPath(dir) + s"/wave=$w")
+    val deadDocmeta = mergedDmw.toSet -- m1.waves.flatMap(_.docmetaWaveIds)
+    IndexBuilder.tableRoots(dir).foreach { root =>
+      val dead = if (root == IndexBuilder.docmetaPath(dir)) deadDocmeta else waves
+      dead.foreach(w => hadoopDelete(spark, s"$root/wave=$w"))
     }
     m1
   }

@@ -139,6 +139,16 @@ object IndexBuilder {
   def normsPath(dir: String) = s"$dir/norms"
   def docmetaPath(dir: String) = s"$dir/docmeta"
   def termstatsPath(dir: String) = s"$dir/termstats"
+  /** The four per-wave table roots; each holds one `wave=N` dir per wave. */
+  private[index] def tableRoots(dir: String): Seq[String] =
+    Seq(segmentsPath(dir), normsPath(dir), docmetaPath(dir), termstatsPath(dir))
+
+  /** The one wave-table writer: `df` (its `wave` column, if any, dropped —
+    * the dir names it) as `root/wave=N`. A direct write, so an empty frame
+    * still leaves a schema-bearing file and the wave stays readable.
+    */
+  private[index] def writeWave(df: DataFrame, root: String, wave: Int): Unit =
+    df.drop("wave").write.mode("overwrite").parquet(s"$root/wave=$wave")
 
   private[index] def hadoopDelete(spark: SparkSession, path: String): Unit = {
     val p = new org.apache.hadoop.fs.Path(path)
@@ -175,10 +185,7 @@ object IndexBuilder {
     val wave = if (m0.waves.isEmpty) 0 else m0.waves.map(_.wave).max + 1
     // Clean any stale (uncommitted) data for this wave id before writing:
     // data-then-manifest ordering makes this safe on resume.
-    Seq(segmentsPath(dir), normsPath(dir), docmetaPath(dir),
-        termstatsPath(dir)).foreach { p =>
-      hadoopDelete(spark, s"$p/wave=$wave")
-    }
+    tableRoots(dir).foreach(root => hadoopDelete(spark, s"$root/wave=$wave"))
     val prevMaxTs = m0.waves.map(_.maxTs).filter(_ != 0L).maxOption
     // buildWave writes the new wave's stats too — incremental by
     // construction: committed waves' stats files are untouched (O(wave)
@@ -238,10 +245,10 @@ object IndexBuilder {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.ExecutionContext.Implicits.global
 
-    val fDocmeta = Future(phase("docmeta-write")(
+    val fDocmeta = Future(phase("docmeta-write")(writeWave(
       docdl.select($"docId", $"key", $"dl", $"ts")
-        .repartitionByRange(col("docId")).sortWithinPartitions("docId")
-        .write.mode("overwrite").parquet(s"${docmetaPath(dir)}/wave=$wave")))
+        .repartitionByRange(col("docId")).sortWithinPartitions("docId"),
+      docmetaPath(dir), wave)))
 
     val normsDs: Dataset[SegmentNorms] = docdl
       .select($"docId", $"dl", $"segId", $"ts").as[DlRow]
@@ -254,13 +261,13 @@ object IndexBuilder {
     // tail capping N->4N scaling efficiency)
     val waveObs = new org.apache.spark.sql.Observation(s"wave-stats-$wave-" +
       java.util.UUID.randomUUID().toString)
-    val fNorms = Future(phase("norms-write")(
+    val fNorms = Future(phase("norms-write")(writeWave(
       normsDs.toDF().drop("wave") // wave comes back as the partition dir column
         .observe(waveObs, sum($"n").as("mDocs"), sum($"sumDl").as("mTokens"),
           min($"minDocId").as("mMinDoc"), max($"maxDocId").as("mMaxDoc"),
           min(when($"minTs" =!= 0L, $"minTs")).as("mMinTs"),
-          max($"maxTs").as("mMaxTs"))
-        .write.mode("overwrite").parquet(s"${normsPath(dir)}/wave=$wave")))
+          max($"maxTs").as("mMaxTs")),
+      normsPath(dir), wave)))
 
     // ---- postings: one row per distinct (doc, term) into the single
     // shuffle (repartition by term+segId) — no per-token exchange exists
@@ -278,25 +285,8 @@ object IndexBuilder {
       .sortWithinPartitions("term", "segId", "docId")
       .as[TfRow]
       .mapPartitions(encodePostingRuns(_, wave, blockSize, withPositions))
-    val fPostings = Future(phase("postings-write") {
-      segDs.toDF()
-        .write.mode("overwrite").partitionBy("wave")
-        .parquet(segmentsPath(dir) + s"/.tmpwave$wave")
-      // partitionBy writes under .tmpwaveN/wave=N; move into place so all
-      // waves share one partitioned root without dynamic-overwrite
-      // semantics. A zero-posting wave (empty/token-free corpus) produces
-      // no partition dir at all — write an explicit empty file so the wave
-      // stays readable.
-      val tmpPart = new org.apache.hadoop.fs.Path(
-        segmentsPath(dir) + s"/.tmpwave$wave/wave=$wave")
-      val fsSeg = tmpPart.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fsSeg.exists(tmpPart))
-        movePartition(spark, tmpPart.toString, segmentsPath(dir) + s"/wave=$wave")
-      else
-        segDs.toDF().limit(0).drop("wave")
-          .write.mode("overwrite").parquet(segmentsPath(dir) + s"/wave=$wave")
-      hadoopDelete(spark, segmentsPath(dir) + s"/.tmpwave$wave")
-    })
+    val fPostings = Future(phase("postings-write")(
+      writeWave(segDs.toDF(), segmentsPath(dir), wave)))
     import scala.concurrent.duration.Duration
     Await.result(fDocmeta, Duration.Inf)
     Await.result(fNorms, Duration.Inf)
@@ -335,15 +325,6 @@ object IndexBuilder {
     val sec = (System.nanoTime() - t0) / 1e9
     WaveInfo(wave, numDocs, totalTokens, minDocId, maxDocId, minTs, maxTs,
       sec, numDocs / sec, postings / sec)
-  }
-
-  private[index] def movePartition(spark: SparkSession, from: String, to: String): Unit = {
-    val f = new org.apache.hadoop.fs.Path(from)
-    val t = new org.apache.hadoop.fs.Path(to)
-    val fs = f.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.mkdirs(t.getParent)
-    if (fs.exists(t)) fs.delete(t, true)
-    fs.rename(f, t)
   }
 
   /** Streaming run-group encoder: consumes rows sorted by (term, segId,
@@ -439,9 +420,7 @@ object IndexBuilder {
     val out = stats.repartitionByRange(col("term")).sortWithinPartitions("term")
       .observe(obs, sum($"df").as("mDf"))
     phase("termstats-write") {
-      out.write.mode("overwrite").parquet(termstatsPath(dir) + s"/.tmpwave$wave")
-      movePartition(spark, termstatsPath(dir) + s"/.tmpwave$wave",
-        termstatsPath(dir) + s"/wave=$wave")
+      writeWave(out, termstatsPath(dir), wave)
       obs.get("mDf") match {
         case null => 0L
         case l: java.lang.Long => l.longValue()

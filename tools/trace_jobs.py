@@ -13,9 +13,11 @@ phase (`--tag`, default `window`: the timed queries) this prints
   - the op count and the median op wall time;
   - for every stage name, how many of the kind's ops ran a stage of that
     name, so a per-query job that should not be there shows up as a name
-    every op carries. Stage names are Spark call sites, e.g. `parquet at
-    IndexBuilder.scala:464` for a Parquet schema-inference job; stages that
-    adaptive query execution submits carry a `CompletableFuture.java` one;
+    every op carries. Stage names are Spark call sites. The jobs a
+    `Searcher` runs itself are named by their step (`Searcher.termStats`,
+    `Searcher.touchedSegments`, `Searcher.resolve`, ...); other stages that
+    adaptive query execution submits, such as those of the caller's own
+    collect, carry a `CompletableFuture.java` one;
   - for the op whose wall time is nearest the median, each job's offset
     from the op start, its duration, and its stage names. The gaps between
     jobs are driver time.
