@@ -132,9 +132,11 @@ object Corpus {
       // recomputation would re-sample new ones — a lazy result would pair
       // stale offsets with fresh partitions. Same staged-table shape as
       // Dedup.materializeAndRelease.
-      val tmp = graft.util.Staging.newStagedDir(spark, "corpus", stagingDir)
-      out.write.mode("overwrite").parquet(tmp)
-      spark.read.parquet(tmp)
+      graft.util.Staging.scoped(spark, stagingDir) { st =>
+        val tmp = st.result("corpus")
+        out.write.mode("overwrite").parquet(tmp)
+        spark.read.parquet(tmp)
+      }
     } finally base.unpersist()
   }
 }

@@ -97,51 +97,37 @@ object Dedup {
 
   private def $(s: String) = col(s)
 
-  /** Shared-FS staging root (see [[graft.util.Staging]]): explicit
-    * per-call `stagingDir` argument, else `spark.graft.stagingDir` conf,
-    * else `<warehouse dir>/_graft_staging` — never driver-local temp.
-    */
-  private[ops] def stagingRoot(spark: org.apache.spark.sql.SparkSession,
-      explicit: Option[String]): String =
-    graft.util.Staging.root(spark, explicit)
-
-  /** Delete the staging tables the DEDUP operators created in this JVM
-    * (prefix-scoped delegation to the shared [[graft.util.Staging]]
-    * registry — streaming changelogs and staged stream sources registered
-    * by other operators are left alone, since their consuming DataFrames
-    * may still be lazy). Call once the DataFrames returned by the dedup
-    * operators are fully consumed; use `Staging.dropStaged()` directly for
-    * a full end-of-run drain.
-    */
-  def dropStaged(under: Option[String] = None): Unit =
-    graft.util.Staging.dropStaged(under, prefix = Some("dedup"))
-
   /** Materialize `result` to a staging table, then release the cached
     * inputs that fed it. The persisted staging tables here are corpus-sized
     * (shingles, signatures); returning a lazy plan over them would leak the
     * cache for the lifetime of the session (one leaked cache per query in a
     * Verify/Bench run). At cluster scale this write IS the natural pipeline
-    * shape: dedup stages checkpoint to a staging table anyway.
+    * shape: dedup stages checkpoint to a staging table anyway. The inputs
+    * are released on every path; a failed write also deletes its staged
+    * dir, a successful one stays registered for the end-of-run
+    * `Staging.dropStaged()` drain (the returned frame reads it).
     */
   private def materializeAndRelease(result: DataFrame,
       cached: Seq[DataFrame], stagingDir: Option[String],
       opName: String = "dedup"): DataFrame = {
     val spark = result.sparkSession
-    // measurement hook (guide §1): the returned frame is a scan of the
-    // staged table, so the interesting plan is the one BEHIND the staging
-    // write — dump it when a debug explain dir is configured
-    spark.conf.getOption("spark.graft.explainDir").foreach { d =>
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get(d, s"dedup_$opName.txt"),
-        result.queryExecution.explainString(
-          org.apache.spark.sql.execution.FormattedMode)
-          .getBytes(java.nio.charset.StandardCharsets.UTF_8)): Unit
+    graft.util.Staging.scoped(spark, stagingDir) { st =>
+      val tmp = st.result("dedup")
+      try {
+        // measurement hook (guide §1): the returned frame is a scan of the
+        // staged table, so the interesting plan is the one BEHIND the
+        // staging write — dump it when a debug explain dir is configured
+        spark.conf.getOption("spark.graft.explainDir").foreach { d =>
+          java.nio.file.Files.write(
+            java.nio.file.Paths.get(d, s"dedup_$opName.txt"),
+            result.queryExecution.explainString(
+              org.apache.spark.sql.execution.FormattedMode)
+              .getBytes(java.nio.charset.StandardCharsets.UTF_8)): Unit
+        }
+        result.write.mode("overwrite").parquet(tmp)
+      } finally cached.foreach(_.unpersist())
+      spark.read.parquet(tmp)
     }
-    val tmp = graft.util.Staging.newStagedDir(spark, "dedup",
-      stagingDir)
-    result.write.mode("overwrite").parquet(tmp)
-    cached.foreach(_.unpersist())
-    spark.read.parquet(tmp)
   }
 
   /** Exact n-gram Jaccard near-dup pairs (a < b, jaccard >= threshold).
@@ -424,11 +410,12 @@ object Dedup {
     * Reps only ever decrease, so the per-round fixpoint check (any row
     * changed?) is a monotone convergence test, and every intermediate map
     * is a valid (if unfinished) component assignment. Per-round frames are
-    * persisted and the previous round released; every `checkpointEvery`
-    * rounds the label table is rewritten through the shared staging root
-    * ([[graft.util.Staging]]) to cut lineage, so plan size and recovery
-    * cost stay bounded no matter how many rounds a pathological graph
-    * needs. Fully deterministic (min ids; no RNG).
+    * persisted and the previous round released (all of them when the call
+    * returns or throws); every `checkpointEvery`
+    * rounds the label table is rewritten through a call-scoped dir under
+    * the shared staging root ([[graft.util.Staging]]) to cut lineage, so
+    * plan size and recovery cost stay bounded no matter how many rounds a
+    * pathological graph needs. Fully deterministic (min ids; no RNG).
     */
   def clusters(nodes: DataFrame, idCol: String, pairs: DataFrame,
       aCol: String = "a", bCol: String = "b", maxRounds: Int = 50,
@@ -479,51 +466,58 @@ object Dedup {
         .select(col("id").as(idCol),
           coalesce(col("rep"), col("id")).as("rep"))
     }
-    val edges = p.select(col("a").as("u"), col("b").as("v"))
-      .union(p.select(col("b").as("u"), col("a").as("v")))
-      .persist(lvl)
-    // label every node mentioned anywhere: the given node set plus edge
-    // endpoints (callers may cluster a pair list whose endpoints are not
-    // all in `nodes`; reps must still resolve through them)
-    var labels = ids.union(edges.select(col("u").as("id"))).distinct()
-      .select(col("id"), col("id").as("rep"))
-      .persist(lvl)
-    var round = 0
-    var converged = edges.isEmpty // no pairs -> identity map, done
-    while (!converged && round < maxRounds) {
-      val nbrMin = edges
-        .join(labels.select(col("id").as("v"), col("rep")), "v")
-        .groupBy(col("u")).agg(min(col("rep")).as("nm"))
-      val stepped = labels
-        .join(nbrMin.select(col("u").as("id"), col("nm")), Seq("id"), "left")
-        .select(col("id"),
-          least(col("rep"), coalesce(col("nm"), col("rep"))).as("rep"))
-        .persist(lvl) // feeds BOTH sides of the jump join below
-      // pointer jump: every rep value is itself a labeled id (reps are
-      // minima over ids), so the inner join is total
-      val jumped0 = stepped
-        .join(stepped.select(col("id").as("rep"), col("rep").as("jrep")),
-          Seq("rep"))
-        .select(col("id"), col("jrep").as("rep"))
-      val jumped =
-        (if ((round + 1) % checkpointEvery == 0) {
-          val dir = graft.util.Staging.newStagedDir(spark, "dedup-cc", stagingDir)
-          jumped0.write.mode("overwrite").parquet(dir)
-          spark.read.parquet(dir)
-        } else jumped0).persist(lvl)
-      converged = jumped.as("n")
-        .join(labels.as("o"), col("n.id") === col("o.id"))
-        .where(col("n.rep") =!= col("o.rep"))
-        .isEmpty
-      labels.unpersist()
-      stepped.unpersist()
-      labels = jumped
-      round += 1
-    }
-    require(converged,
-      s"clusters() did not converge in $maxRounds rounds (graph needs more; raise maxRounds)")
-    val out = ids.join(labels, "id").select(col("id").as(idCol), col("rep"))
-    materializeAndRelease(out, Seq(edges, labels), stagingDir, "clusters")
+    // the frames this call holds persisted; whatever is still held is
+    // released when the call ends, however it ends
+    val held = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    def hold(df: DataFrame): DataFrame = { held += df.persist(lvl); df }
+    def release(df: DataFrame): Unit = { df.unpersist(); held -= df }
+    // the per-round lineage-cut dirs are call-scoped: the staged result
+    // never reads them, so they go when the call ends
+    try graft.util.Staging.scoped(spark, stagingDir) { st =>
+      val edges = hold(p.select(col("a").as("u"), col("b").as("v"))
+        .union(p.select(col("b").as("u"), col("a").as("v"))))
+      // label every node mentioned anywhere: the given node set plus edge
+      // endpoints (callers may cluster a pair list whose endpoints are not
+      // all in `nodes`; reps must still resolve through them)
+      var labels = hold(ids.union(edges.select(col("u").as("id"))).distinct()
+        .select(col("id"), col("id").as("rep")))
+      var round = 0
+      var converged = edges.isEmpty // no pairs -> identity map, done
+      while (!converged && round < maxRounds) {
+        val nbrMin = edges
+          .join(labels.select(col("id").as("v"), col("rep")), "v")
+          .groupBy(col("u")).agg(min(col("rep")).as("nm"))
+        // persisted: feeds BOTH sides of the jump join below
+        val stepped = hold(labels
+          .join(nbrMin.select(col("u").as("id"), col("nm")), Seq("id"), "left")
+          .select(col("id"),
+            least(col("rep"), coalesce(col("nm"), col("rep"))).as("rep")))
+        // pointer jump: every rep value is itself a labeled id (reps are
+        // minima over ids), so the inner join is total
+        val jumped0 = stepped
+          .join(stepped.select(col("id").as("rep"), col("rep").as("jrep")),
+            Seq("rep"))
+          .select(col("id"), col("jrep").as("rep"))
+        val jumped = hold(
+          if ((round + 1) % checkpointEvery == 0) {
+            val dir = st.temp("dedup-cc")
+            jumped0.write.mode("overwrite").parquet(dir)
+            spark.read.parquet(dir)
+          } else jumped0)
+        converged = jumped.as("n")
+          .join(labels.as("o"), col("n.id") === col("o.id"))
+          .where(col("n.rep") =!= col("o.rep"))
+          .isEmpty
+        release(labels)
+        release(stepped)
+        labels = jumped
+        round += 1
+      }
+      require(converged,
+        s"clusters() did not converge in $maxRounds rounds (graph needs more; raise maxRounds)")
+      val out = ids.join(labels, "id").select(col("id").as(idCol), col("rep"))
+      materializeAndRelease(out, Nil, stagingDir, "clusters")
+    } finally held.foreach(_.unpersist())
   }
 
   /** SimHash near-dup pairs with Hamming distance <= maxDist, blocked on

@@ -400,6 +400,25 @@ object IvfIndex {
       .where(col("cos") >= threshold)
   }
 
+  /** The batched candidate join (scaladoc of [[topKBatch]], stage 2): a
+    * partition-pruned scan of the probed lists' union joined to the probe
+    * table on `list`. Factored out so tests can assert the plan under both
+    * `broadcastProbes` settings.
+    */
+  private[graft] def batchCandidates(spark: SparkSession, dir: String,
+      probes: DataFrame, broadcastProbes: Boolean,
+      listsOf: Option[Seq[Int]] = None): DataFrame = {
+    // bounded driver fan-in: at most nlist distinct list ids (callers that
+    // built the probe table driver-side pass the set directly)
+    val ls = listsOf.getOrElse(
+      probes.select("list").distinct().collect().map(_.getInt(0)).toSeq)
+    val probeSide = if (broadcastProbes) broadcast(probes) else probes
+    spark.read.parquet(dataPath(dir))
+      .where(col("list").isin(ls: _*)) // partition pruning, as candidatesFor
+      .select(col("id"), col("vec"), col("list"))
+      .join(probeSide, "list")
+  }
+
   /** Certified-exact BATCHED top-k: one result set per row of `queries`
     * ((qidCol LONG, vecCol ARRAY<FLOAT>)), returned as (qid, id, cos) with
     * cos rounded to 4 decimals and ranked by (cos DESC, id ASC) — the
@@ -445,25 +464,6 @@ object IvfIndex {
     * drain) so the probe/meta caches release immediately instead of living
     * for the consumer's lifetime. Null/malformed query vectors are dropped.
     */
-  /** The batched candidate join (scaladoc of [[topKBatch]], stage 2): a
-    * partition-pruned scan of the probed lists' union joined to the probe
-    * table on `list`. Factored out so tests can assert the plan under both
-    * `broadcastProbes` settings.
-    */
-  private[graft] def batchCandidates(spark: SparkSession, dir: String,
-      probes: DataFrame, broadcastProbes: Boolean,
-      listsOf: Option[Seq[Int]] = None): DataFrame = {
-    // bounded driver fan-in: at most nlist distinct list ids (callers that
-    // built the probe table driver-side pass the set directly)
-    val ls = listsOf.getOrElse(
-      probes.select("list").distinct().collect().map(_.getInt(0)).toSeq)
-    val probeSide = if (broadcastProbes) broadcast(probes) else probes
-    spark.read.parquet(dataPath(dir))
-      .where(col("list").isin(ls: _*)) // partition pruning, as candidatesFor
-      .select(col("id"), col("vec"), col("list"))
-      .join(probeSide, "list")
-  }
-
   def topKBatch(spark: SparkSession, dir: String, queries: DataFrame,
       qidCol: String, vecCol: String, k: Int, excludeSelf: Boolean = true,
       nprobe0: Int = 4, broadcastProbes: Boolean = true): DataFrame = {
@@ -577,10 +577,12 @@ object IvfIndex {
         col("e.score"), col("e.id"), k).as("tk"))
       .select(col("qid"), explode(col("tk")).as("e"))
       .select(col("qid"), col("e.id").as("id"), col("e.score").as("cos"))
-    val tmp = graft.util.Staging.newStagedDir(spark, "ivf-batch", None)
-    out2.write.mode("overwrite").parquet(tmp)
-    r1.unpersist()
-    cleanup()
-    spark.read.parquet(tmp)
+    graft.util.Staging.scoped(spark) { st =>
+      val tmp = st.result("ivf-batch")
+      out2.write.mode("overwrite").parquet(tmp)
+      r1.unpersist()
+      cleanup()
+      spark.read.parquet(tmp)
+    }
   }
 }

@@ -1,52 +1,37 @@
 package graft.streaming
 
-import graft.index.{IndexBuilder, IndexManifest, IndexOptions, ManifestIO}
+import graft.index.{IndexBuilder, IndexOptions, ManifestIO}
 import graft.sources.CorpusSource
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.util.Staging
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.LongType
 
 /** Structured-Streaming facets of the engine.
   *
   * The reference has no streaming framework, but its ingest IS an unbounded
   * push stream with a flush watermark (`max_active_size`,
-  * /root/reference/src/storage/storage.rs:221-224) and a monotone-timestamp
+  * `src/storage/storage.rs:221-224`) and a monotone-timestamp
   * clamp (block.rs:376-383). Those map to: micro-batch `foreachBatch` index
-  * appends (one wave per batch ≙ one memtable flush) and watermarked
-  * windowed aggregation.
+  * appends (one wave per batch ≙ one memtable flush, [[ingestPagesStream]])
+  * and three BOUNDED operators over an events path (q22
+  * [[windowedEventCountsIncremental]], q31 [[distinctKeysIncremental]], q35
+  * [[sessionizeComplete]]), which all run through one changelog drain.
+  *
+  * Staging per bounded call ([[graft.util.Staging]]): the staged stream
+  * inputs (the single-file source copy, sessionizeComplete's source and
+  * tmp dirs) are call-scoped and deleted when the call returns or throws;
+  * the changelog the returned frame reads (`stream-log-`, `stream-dedup-`,
+  * `stream-sess-`) is deleted if the call throws and otherwise stays
+  * registered until the end-of-run `Staging.dropStaged()` drain — one dir
+  * per call.
   */
 object StreamingOps {
 
-  private val nameCounter = new java.util.concurrent.atomic.AtomicInteger(0)
-
-  /** Run `f` with streaming checkpoint FILE CHECKSUMS disabled, restoring
-    * the caller's setting after. Spark 4.1's ChecksumCheckpointFileManager
-    * leaks its worker threads when a query stops (measured: ~32 threads
-    * PER QUERY accumulating across repeated bounded runs, with matching
-    * rep-over-rep slowdown from the checksum I/O). The bounded-run helpers
-    * below use throwaway TEMP checkpoints that are never resumed, so the
-    * checksums protect nothing there; durable-checkpoint paths
-    * ([[ingestStream]]) keep the session's setting untouched.
-    *
-    * The flip mutates SESSION-global runtime conf, so it is serialized on a
-    * JVM-wide lock: two interleaved bounded runs would otherwise each
-    * restore the other's temporary "false" as the final setting. The lock
-    * cannot protect an unrelated DURABLE-checkpoint query the caller
-    * starts concurrently on the SAME session mid-f (it would capture
-    * fileChecksum=false at start) — start durable queries outside a
-    * bounded helper call, or on their own session.
-    */
-  private val checksumFlipLock = new Object
-  private def withoutCheckpointChecksums[T](spark: SparkSession)(f: => T): T =
-    checksumFlipLock.synchronized {
-      val key = "spark.sql.streaming.checkpoint.fileChecksum.enabled"
-      val prev = spark.conf.getOption(key)
-      spark.conf.set(key, "false")
-      try f
-      finally prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
-    }
+  /** Input bytes per state-store partition of a bounded run. */
+  private val BytesPerStatePartition = 32L * 1024 * 1024
+  /** Runaway guard on the derived state-partition count. */
+  private val MaxStatePartitions = 32768L
 
   /** Total length of the files under `path` (driver-side listing, the same
     * metadata the file source lists anyway).
@@ -65,60 +50,97 @@ object StreamingOps {
     * derive it from the data, never from the local core count). A stateful
     * streaming query creates one state store per shuffle partition and pays
     * per-partition checkpoint/commit I/O EVERY micro-batch, so partitions
-    * are sized at ~`spark.graft.stream.bytesPerStatePartition` (default
-    * 32 MB) of input each: small bounded inputs get a handful of stores
-    * instead of one per core (measured: 32 stores over a 2 MB input spent
-    * more wall time in state commit than in the aggregation), and a 100-TB
-    * input derives thousands — the same monotone rule at every scale.
-    * Bounded above only by `spark.graft.stream.maxStatePartitions`
-    * (default 32768) as a runaway guard.
+    * are sized at ~[[BytesPerStatePartition]] (32 MB) of input each: small
+    * bounded inputs get a handful of stores instead of one per core
+    * (measured: 32 stores over a 2 MB input spent more wall time in state
+    * commit than in the aggregation), and a 100-TB input derives thousands
+    * — the same monotone rule at every scale. Bounded above only by
+    * [[MaxStatePartitions]] (32768) as a runaway guard.
     */
   private def statePartitionsFor(spark: SparkSession, path: String): Int = {
-    val target = spark.conf
-      .getOption("spark.graft.stream.bytesPerStatePartition")
-      .map(_.toLong).getOrElse(32L * 1024 * 1024)
-    val cap = spark.conf.getOption("spark.graft.stream.maxStatePartitions")
-      .map(_.toInt).getOrElse(32768)
     val bytes = inputBytes(spark, path)
-    math.max(1L, math.min((bytes + target - 1) / target, cap.toLong)).toInt
+    math.max(1L, math.min((bytes + BytesPerStatePartition - 1) /
+      BytesPerStatePartition, MaxStatePartitions)).toInt
   }
 
-  /** Run a bounded streaming query with (a) checkpoint checksums off
-    * ([[withoutCheckpointChecksums]] scaladoc) and (b)
-    * `spark.sql.shuffle.partitions` — which a streaming query captures at
-    * start as its STATE partition count — derived from the input size via
-    * [[statePartitionsFor]]. Both flips are session-global conf mutations,
-    * so they share the same lock-and-restore discipline.
+  private val confLock = new Object
+
+  /** Run a bounded streaming query with (a) streaming checkpoint FILE
+    * CHECKSUMS off and (b) `spark.sql.shuffle.partitions` — which a
+    * streaming query captures at start as its STATE partition count —
+    * derived from the input size via [[statePartitionsFor]], restoring the
+    * caller's settings after.
+    *
+    * (a): Spark 4.1's ChecksumCheckpointFileManager leaks its worker
+    * threads when a query stops (measured: ~32 threads PER QUERY
+    * accumulating across repeated bounded runs, with matching rep-over-rep
+    * slowdown from the checksum I/O). Bounded runs use throwaway TEMP
+    * checkpoints that are never resumed, so the checksums protect nothing
+    * there; durable-checkpoint paths ([[ingestPagesStream]]) keep the
+    * session's setting untouched.
+    *
+    * Both flips mutate SESSION-global runtime conf, so they are serialized
+    * on a JVM-wide lock: two interleaved bounded runs would otherwise each
+    * restore the other's temporary setting as the final one. The lock
+    * cannot protect an unrelated DURABLE-checkpoint query the caller starts
+    * concurrently on the SAME session mid-f (it would capture
+    * fileChecksum=false at start) — start durable queries outside a bounded
+    * call, or on their own session.
     */
   private def withBoundedStreamConf[T](spark: SparkSession,
       inputPath: String)(f: => T): T =
-    checksumFlipLock.synchronized {
-      val ckKey = "spark.sql.streaming.checkpoint.fileChecksum.enabled"
-      val spKey = "spark.sql.shuffle.partitions"
-      val prevCk = spark.conf.getOption(ckKey)
-      val prevSp = spark.conf.getOption(spKey)
-      spark.conf.set(ckKey, "false")
-      spark.conf.set(spKey, statePartitionsFor(spark, inputPath).toString)
+    confLock.synchronized {
+      val flips = Seq(
+        "spark.sql.streaming.checkpoint.fileChecksum.enabled" -> "false",
+        "spark.sql.shuffle.partitions" ->
+          statePartitionsFor(spark, inputPath).toString)
+      val prev = flips.map { case (k, _) => k -> spark.conf.getOption(k) }
+      flips.foreach { case (k, v) => spark.conf.set(k, v) }
       try f
-      finally {
-        prevCk match {
-          case Some(v) => spark.conf.set(ckKey, v)
-          case None => spark.conf.unset(ckKey)
-        }
-        prevSp match {
-          case Some(v) => spark.conf.set(spKey, v)
-          case None => spark.conf.unset(spKey)
-        }
+      finally prev.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None) => spark.conf.unset(k)
       }
     }
+
+  /** The one bounded-run path: drain `query` (a streaming frame over a
+    * bounded source) into an append-only parquet changelog under a fresh
+    * `prefix` result dir of `st`, and return that dir. Each non-empty
+    * micro-batch is appended straight from the executors, tagged with its
+    * `batch_id` (nothing is re-materialized on the driver). The log is
+    * seeded with an empty frame of the query's own schema plus `batch_id`,
+    * so an all-empty source (no micro-batch ever writes) reads back as an
+    * empty result, not an unreadable 'Unable to infer schema' dir. The run
+    * is sized by the bytes under `inputPath` ([[withBoundedStreamConf]]).
+    * The changelog goes to the shared staging root: executors write it, and
+    * driver-local temp would scatter it across node-local disks.
+    */
+  private def drain(st: Staging.Scope, prefix: String, query: DataFrame,
+      outputMode: String, inputPath: String): String = {
+    val spark = query.sparkSession
+    val logDir = st.result(prefix)
+    spark.createDataFrame(new java.util.ArrayList[Row](),
+        query.schema.add("batch_id", LongType))
+      .write.mode("overwrite").parquet(logDir)
+    withBoundedStreamConf(spark, inputPath) {
+      val q = query.writeStream.outputMode(outputMode)
+        .foreachBatch { (batch: DataFrame, batchId: Long) =>
+          if (!batch.isEmpty)
+            batch.withColumn("batch_id", lit(batchId))
+              .write.mode("append").parquet(logDir): Unit
+        }
+        .start()
+      try q.processAllAvailable() finally q.stop()
+    }
+    logDir
+  }
 
   /** The production streaming form: watermarked tumbling-window aggregation
     * over an event stream, returned as an unstarted streaming DataFrame for
     * the caller to sink (update mode + an incremental sink — kafka/delta/
     * foreachBatch; each window finalizes once the watermark passes it).
-    * [[windowedEventCounts]] below wraps this with a complete-mode memory
-    * sink, which materializes ALL windows on the driver — that form is the
-    * ORACLE SHIM for bounded test inputs, not a production path.
+    * Window start is epoch seconds, so batch/oracle comparisons are
+    * timezone-free.
     */
   def windowedEventCountsStream(events: DataFrame, windowSec: Int = 300,
       watermark: String = "10 minutes"): DataFrame =
@@ -130,36 +152,36 @@ object StreamingOps {
       .select(unix_timestamp(col("window.start")).as("ws"),
         col("event_type"), col("n"), col("total"))
 
-  /** The file streaming source requires a directory; stage single files.
-    * The staged copy goes under the shared staging root
-    * ([[graft.util.Staging]]), NOT a driver-local temp dir: the streaming
-    * file source lists from the driver but the tasks that read the staged
-    * file run on executors, which on a multi-node cluster would resolve a
-    * driver-local path to their own (empty) local disks. The staged dir is
-    * registered for reclamation (`Staging.dropStaged`, also a shutdown
-    * hook), so repeated q22 runs do not leak one corpus copy each.
+  /** A file stream over the bounded parquet `eventsPath`, schema pinned from
+    * the files present. The file streaming source requires a directory, so
+    * a single file is copied into a call-scoped `stream-src` dir of `st`
+    * (under the shared staging root, NOT driver-local temp: the source
+    * lists from the driver but executors read the staged file).
     */
-  private def asStreamDir(spark: SparkSession, eventsPath: String): String = {
+  private def eventStream(spark: SparkSession, st: Staging.Scope,
+      eventsPath: String, maxFilesPerTrigger: Option[Int]): DataFrame = {
+    val schema = spark.read.parquet(eventsPath).schema
     val src = new org.apache.hadoop.fs.Path(eventsPath)
-    val fs = src.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.getFileStatus(src).isDirectory) eventsPath
-    else {
-      val d = new org.apache.hadoop.fs.Path(
-        graft.util.Staging.newStagedDir(spark, "stream-src"))
-      fs.mkdirs(d)
-      org.apache.hadoop.fs.FileUtil.copy(fs, src, fs,
-        new org.apache.hadoop.fs.Path(d, src.getName), false,
-        spark.sparkContext.hadoopConfiguration)
-      d.toString
-    }
+    val conf = spark.sparkContext.hadoopConfiguration
+    val fs = src.getFileSystem(conf)
+    val dir =
+      if (fs.getFileStatus(src).isDirectory) eventsPath
+      else {
+        val d = new org.apache.hadoop.fs.Path(st.temp("stream-src"))
+        fs.mkdirs(d)
+        org.apache.hadoop.fs.FileUtil.copy(fs, src, fs,
+          new org.apache.hadoop.fs.Path(d, src.getName), false, conf)
+        d.toString
+      }
+    val reader = spark.readStream.schema(schema)
+    maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
+    reader.parquet(dir)
   }
 
   /** PRODUCTION-SHAPE windowed aggregation over a bounded events path, and
     * the driver-gated q22 form: [[windowedEventCountsStream]] in UPDATE
-    * mode, sunk through `foreachBatch` as an append-only parquet change log
-    * — each micro-batch writes only the (window, event_type) rows whose
-    * aggregates changed, tagged with the batch id, straight from the
-    * executors (nothing is re-materialized on the driver, unlike the
+    * mode through [[drain]] — each micro-batch logs only the
+    * (window, event_type) rows whose aggregates changed (unlike a
     * complete-mode memory sink, which re-collects EVERY window every batch
     * and cannot scale past driver memory). The returned DataFrame is the
     * log compacted to the latest row per key — the standard
@@ -167,80 +189,34 @@ object StreamingOps {
     * (a kafka/delta sink would consume the same update stream directly).
     */
   def windowedEventCountsIncremental(spark: SparkSession, eventsPath: String,
-      windowSec: Int = 300, maxFilesPerTrigger: Option[Int] = None): DataFrame = {
-    val schema = spark.read.parquet(eventsPath).schema
-    // changelog goes to the shared staging root (executors write it;
-    // driver-local temp would scatter the log across node-local disks on a
-    // real cluster) and is registered for reclamation like dedup staging
-    val logDir = graft.util.Staging.newStagedDir(spark, "stream-log")
-    val reader = spark.readStream.schema(schema)
-    maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
-    val stream = reader.parquet(asStreamDir(spark, eventsPath))
-    // the cast inside windowedEventCountsStream also converts parquet NTZ
-    // timestamps to session-TZ (UTC) instants for watermarking
-    val agg = windowedEventCountsStream(stream, windowSec)
-    // seed the log with an empty frame of the changelog schema: an all-empty
-    // source (no micro-batch ever writes) must yield an empty result, not an
-    // unreadable 'Unable to infer schema' dir
-    spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
-        agg.schema.add("batch_id", org.apache.spark.sql.types.LongType))
-      .write.mode("overwrite").parquet(logDir)
-    withBoundedStreamConf(spark, eventsPath) {
-      val q = agg.writeStream.outputMode("update")
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          if (!batch.isEmpty)
-            batch.withColumn("batch_id", lit(batchId))
-              .write.mode("append").parquet(logDir): Unit
-        }
-        .start()
-      try q.processAllAvailable() finally q.stop()
+      windowSec: Int = 300, maxFilesPerTrigger: Option[Int] = None): DataFrame =
+    Staging.scoped(spark) { st =>
+      // the cast inside windowedEventCountsStream also converts parquet NTZ
+      // timestamps to session-TZ (UTC) instants for watermarking
+      val agg = windowedEventCountsStream(
+        eventStream(spark, st, eventsPath, maxFilesPerTrigger), windowSec)
+      spark.read.parquet(drain(st, "stream-log", agg, "update", eventsPath))
+        .groupBy(col("ws"), col("event_type"))
+        .agg(max_by(struct(col("n"), col("total")), col("batch_id")).as("v"))
+        .select(col("ws"), col("event_type"), col("v.n").as("n"),
+          col("v.total").as("total"))
     }
-    spark.read.parquet(logDir)
-      .groupBy(col("ws"), col("event_type"))
-      .agg(max_by(struct(col("n"), col("total")), col("batch_id")).as("v"))
-      .select(col("ws"), col("event_type"), col("v.n").as("n"),
-        col("v.total").as("total"))
-  }
-
-  /** Tumbling-window counts over the events stream, run synchronously to
-    * completion against a static parquet path (memory sink). Window start
-    * is returned as epoch seconds so batch/oracle comparisons are
-    * timezone-free. TEST HELPER ONLY, by construction (complete output
-    * mode, driver-bound memory sink — every window re-collected on the
-    * driver each batch): StreamingSpec uses it to cross-check the
-    * update-mode production form, and nothing else should.
-    */
-  def windowedEventCounts(spark: SparkSession, eventsPath: String,
-      windowSec: Int = 300): DataFrame = {
-    val schema = spark.read.parquet(eventsPath).schema
-    val stream = spark.readStream.schema(schema)
-      .parquet(asStreamDir(spark, eventsPath))
-    val agg = windowedEventCountsStream(stream, windowSec)
-    val name = s"graft_stream_${nameCounter.incrementAndGet()}"
-    withoutCheckpointChecksums(spark) {
-      val q = agg.writeStream.outputMode("complete")
-        .format("memory").queryName(name).start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    spark.table(name)
-  }
 
   /** Streaming exact deduplication over a bounded events path — the
     * PRODUCTION shape for "emit each key once" ingestion feeds (e.g. url-
     * or content-hash dedup on a crawl stream): event-time watermark +
     * `dropDuplicatesWithinWatermark` (state holds one entry per key and
     * evicts it once the watermark passes `withinWatermark` beyond its
-    * event time — bounded state, unlike unbounded `dropDuplicates`), sunk
-    * through `foreachBatch` as an append-only parquet log written straight
-    * from the executors. The dedup operator emits a key's FIRST arrival
-    * immediately (the watermark governs state eviction, not emission), so
-    * the log holds each key at most once per watermark horizon; the
-    * returned frame reads the log RAW — a re-emission bug would surface as
-    * duplicate rows, not be masked by a compaction. (An at-least-once
-    * consumer of the log would dedupe by (batch_id, key); bounded runs
-    * retry nothing.) Only the key columns are returned: which physical row
-    * arrived first within a micro-batch is partition-order-dependent, the
-    * key SET is deterministic.
+    * event time — bounded state, unlike unbounded `dropDuplicates`),
+    * drained through [[drain]] in append mode. The dedup operator emits a
+    * key's FIRST arrival immediately (the watermark governs state eviction,
+    * not emission), so the log holds each key at most once per watermark
+    * horizon; the returned frame reads the log RAW — a re-emission bug
+    * would surface as duplicate rows, not be masked by a compaction. (An
+    * at-least-once consumer of the log would dedupe by (batch_id, key);
+    * bounded runs retry nothing.) Only the key columns are returned: which
+    * physical row arrived first within a micro-batch is
+    * partition-order-dependent, the key SET is deterministic.
     *
     * With `withinWatermark` longer than the bounded input's event-time
     * span, state never evicts and the result is exactly
@@ -250,51 +226,16 @@ object StreamingOps {
       keyCols: Seq[String], withinWatermark: String = "24 hours",
       maxFilesPerTrigger: Option[Int] = None): DataFrame = {
     require(keyCols.nonEmpty, "need at least one key column")
-    val schema = spark.read.parquet(eventsPath).schema
-    val logDir = graft.util.Staging.newStagedDir(spark, "stream-dedup")
-    val reader = spark.readStream.schema(schema)
-    maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
-    val stream = reader.parquet(asStreamDir(spark, eventsPath))
-    val dd = stream
-      .withColumn("ts", col("ts").cast("timestamp"))
-      .withWatermark("ts", withinWatermark)
-      .select(keyCols.map(col) :+ col("ts"): _*)
-      .dropDuplicatesWithinWatermark(keyCols)
-      .select(keyCols.map(col): _*)
-    // seed like the windowed changelog: an all-empty source must read back
-    // as an empty result with the right schema
-    spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
-        dd.schema.add("batch_id", org.apache.spark.sql.types.LongType))
-      .write.mode("overwrite").parquet(logDir)
-    withBoundedStreamConf(spark, eventsPath) {
-      val q = dd.writeStream.outputMode("append")
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          if (!batch.isEmpty)
-            batch.withColumn("batch_id", lit(batchId))
-              .write.mode("append").parquet(logDir): Unit
-        }
-        .start()
-      try q.processAllAvailable() finally q.stop()
+    Staging.scoped(spark) { st =>
+      val dd = eventStream(spark, st, eventsPath, maxFilesPerTrigger)
+        .withColumn("ts", col("ts").cast("timestamp"))
+        .withWatermark("ts", withinWatermark)
+        .select(keyCols.map(col) :+ col("ts"): _*)
+        .dropDuplicatesWithinWatermark(keyCols)
+        .select(keyCols.map(col): _*)
+      spark.read.parquet(drain(st, "stream-dedup", dd, "append", eventsPath))
+        .select(keyCols.map(col): _*)
     }
-    spark.read.parquet(logDir).select(keyCols.map(col): _*)
-  }
-
-  /** Streaming index ingest: every micro-batch becomes one committed LSM
-    * wave (build for the first, append + tiered compaction after). DocIds
-    * must already be assigned monotonically upstream (e.g. by an offset
-    * column), mirroring the reference's rebase discipline.
-    */
-  def ingestStream(spark: SparkSession, docs: DataFrame, indexDir: String,
-      opts: IndexOptions): org.apache.spark.sql.streaming.StreamingQuery = {
-    docs.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      if (batch.isEmpty) ()
-      else if (!ManifestIO.exists(indexDir))
-        IndexBuilder.build(batch.sparkSession, batch, indexDir, opts): Unit
-      else {
-        IndexBuilder.append(batch.sparkSession, batch, indexDir)
-        graft.index.Compactor.compact(batch.sparkSession, indexDir): Unit
-      }
-    }.start()
   }
 
   /** Streaming sessionization drained to COMPLETENESS — equals the batch
@@ -308,10 +249,10 @@ object StreamingOps {
     * sentinel's own still-open session is the only state left (filtered
     * here; the reserved-id contract is ENFORCED — an input holding
     * negative user ids fails loudly instead of silently losing those
-    * sessions). Emitted sessions land in an executor-written append-only
-    * parquet log (the q31 shape — append mode emits each closed session
-    * exactly once, so the log is read back raw and a double-emission bug
-    * would surface as duplicate rows).
+    * sessions). Emitted sessions go through [[drain]] in append mode (the
+    * q31 shape — append mode emits each closed session exactly once, so
+    * the log is read back raw and a double-emission bug would surface as
+    * duplicate rows).
     *
     * Staging shape (round-6 fix, r5 verdict #4): micro-batch 0 is the
     * corpus staged at its ORIGINAL partitioning — a distributed write
@@ -320,79 +261,59 @@ object StreamingOps {
     * events are not time-ordered across files, so a split batch could
     * advance the watermark past a straddling user's still-open session).
     * Only the 1-row sentinel is ever written single-task; the old shape
-    * funneled the WHOLE corpus through one `coalesce(1)` write task.
+    * funneled the WHOLE corpus through one `coalesce(1)` write task. The
+    * staged source and its tmp dirs are call-scoped.
     */
   def sessionizeComplete(spark: SparkSession, eventsPath: String,
-      gapSec: Long = graft.ops.Sessionize.DefaultGapSec): DataFrame = {
-    val src = spark.read.parquet(eventsPath)
-    val schema = src.schema
-    val conf = spark.sparkContext.hadoopConfiguration
-    val srcDir = new org.apache.hadoop.fs.Path(
-      graft.util.Staging.newStagedDir(spark, "stream-sess-src"))
-    val fs = srcDir.getFileSystem(conf)
-    fs.mkdirs(srcDir)
-    val now = System.currentTimeMillis()
-    // batch 0: distributed staging write; the reserved-id check rides the
-    // same job as an observed metric (no extra scan — ADVICE item 4)
-    val obs = org.apache.spark.sql.Observation()
-    val tmp = new org.apache.hadoop.fs.Path(
-      graft.util.Staging.newStagedDir(spark, "stream-sess-tmp"))
-    src.observe(obs, min(col("user_id").cast("long")).as("min_uid"))
-      .write.mode("overwrite").parquet(tmp.toString)
-    val minUid = obs.get("min_uid")
-    require(minUid == null || minUid.asInstanceOf[Long] >= 0L,
-      s"sessionizeComplete reserves user_id -1 for the drain sentinel, but " +
-        s"the input holds user_id $minUid — remap negative ids first")
-    // every data file gets ONE mtime, the sentinel a strictly later one:
-    // the file source orders by mtime, so ties could smuggle the sentinel
-    // into batch 0 (explicit setTimes, not write order, carries the proof)
-    val dataFiles = fs.listStatus(tmp).map(_.getPath)
-      .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
-    dataFiles.zipWithIndex.foreach { case (p, i) =>
-      val dst = new org.apache.hadoop.fs.Path(srcDir, f"ev0-$i%05d.parquet")
-      if (!fs.rename(p, dst)) sys.error(s"staging rename failed: $p")
-      fs.setTimes(dst, now - 60000L, -1L)
-    }
-    fs.delete(tmp, true)
-    // batch 1: the 1-row sentinel — the only single-task write
-    def stageOne(df: DataFrame, name: String, mtime: Long): Unit = {
-      val t = new org.apache.hadoop.fs.Path(
-        graft.util.Staging.newStagedDir(spark, "stream-sess-tmp"))
-      df.coalesce(1).write.mode("overwrite").parquet(t.toString)
+      gapSec: Long = graft.ops.Sessionize.DefaultGapSec): DataFrame =
+    Staging.scoped(spark) { st =>
+      val src = spark.read.parquet(eventsPath)
+      val schema = src.schema
+      val conf = spark.sparkContext.hadoopConfiguration
+      val srcDir = new org.apache.hadoop.fs.Path(st.temp("stream-sess-src"))
+      val fs = srcDir.getFileSystem(conf)
+      fs.mkdirs(srcDir)
+      val now = System.currentTimeMillis()
+      // batch 0: distributed staging write; the reserved-id check rides the
+      // same job as an observed metric (no extra scan — ADVICE item 4)
+      val obs = org.apache.spark.sql.Observation()
+      val tmp = new org.apache.hadoop.fs.Path(st.temp("stream-sess-tmp"))
+      src.observe(obs, min(col("user_id").cast("long")).as("min_uid"))
+        .write.mode("overwrite").parquet(tmp.toString)
+      val minUid = obs.get("min_uid")
+      require(minUid == null || minUid.asInstanceOf[Long] >= 0L,
+        s"sessionizeComplete reserves user_id -1 for the drain sentinel, but " +
+          s"the input holds user_id $minUid — remap negative ids first")
+      // every data file gets ONE mtime, the sentinel a strictly later one:
+      // the file source orders by mtime, so ties could smuggle the sentinel
+      // into batch 0 (explicit setTimes, not write order, carries the proof)
+      val dataFiles = fs.listStatus(tmp).map(_.getPath)
+        .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
+      dataFiles.zipWithIndex.foreach { case (p, i) =>
+        val dst = new org.apache.hadoop.fs.Path(srcDir, f"ev0-$i%05d.parquet")
+        if (!fs.rename(p, dst)) sys.error(s"staging rename failed: $p")
+        fs.setTimes(dst, now - 60000L, -1L)
+      }
+      // batch 1: the 1-row sentinel — the only single-task write
+      val t = new org.apache.hadoop.fs.Path(st.temp("stream-sess-tmp"))
+      src.limit(1)
+        .withColumn("user_id", lit(-1L).cast(schema("user_id").dataType))
+        .withColumn("ts", lit("2100-01-01 00:00:00").cast(schema("ts").dataType))
+        .coalesce(1).write.mode("overwrite").parquet(t.toString)
       val part = fs.listStatus(t)
         .map(_.getPath).find(_.getName.endsWith(".parquet")).get
-      val dst = new org.apache.hadoop.fs.Path(srcDir, name)
-      if (!fs.rename(part, dst)) sys.error(s"staging rename failed: $part")
-      fs.setTimes(dst, mtime, -1L)
-      fs.delete(t, true)
-    }
-    stageOne(src.limit(1)
-      .withColumn("user_id", lit(-1L).cast(schema("user_id").dataType))
-      .withColumn("ts", lit("2100-01-01 00:00:00").cast(schema("ts").dataType)),
-      "ev1-sentinel.parquet", now)
-    val logDir = graft.util.Staging.newStagedDir(spark, "stream-sess")
-    val outCols = Seq("user_id", "sid", "n_events", "duration_sec")
-    spark.range(0).selectExpr("id AS user_id", "id AS sid",
-        "id AS n_events", "id AS duration_sec", "id AS batch_id")
-      .limit(0).write.mode("overwrite").parquet(logDir)
-    withBoundedStreamConf(spark, srcDir.toString) {
+      val sentinel = new org.apache.hadoop.fs.Path(srcDir, "ev1-sentinel.parquet")
+      if (!fs.rename(part, sentinel)) sys.error(s"staging rename failed: $part")
+      fs.setTimes(sentinel, now, -1L)
       val stream = spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", math.max(1, dataFiles.length).toString)
         .parquet(srcDir.toString)
       val sess = graft.ops.Sessionize.streaming(stream, gapSec).toDF()
-      val q = sess.writeStream.outputMode("append")
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          if (!batch.isEmpty)
-            batch.withColumn("batch_id", lit(batchId))
-              .write.mode("append").parquet(logDir): Unit
-        }
-        .start()
-      try q.processAllAvailable() finally q.stop()
+      spark.read.parquet(
+          drain(st, "stream-sess", sess, "append", srcDir.toString))
+        .where(col("user_id") >= 0)
+        .select("user_id", "sid", "n_events", "duration_sec")
     }
-    spark.read.parquet(logDir)
-      .where(col("user_id") >= 0)
-      .select(outCols.map(col): _*)
-  }
 
   /** One micro-batch of pages-shaped rows into the index, EXACTLY-ONCE
     * under foreachBatch's at-least-once replay: docIds are assigned from

@@ -32,7 +32,4 @@ object Hashing {
     }
     h
   }
-
-  /** Stable 64-bit hash of a string under a seed (FNV-1a then seeded mix). */
-  @inline def hashString(s: String, seed: Long): Long = mix(seed, fnv1a64(s))
 }

@@ -16,9 +16,18 @@ import scala.util.control.NonFatal
   * `<spark.sql.warehouse.dir>/_graft_staging` (shared wherever the
   * warehouse is).
   *
-  * Every staged dir is tracked in a JVM-wide registry and reclaimed by
-  * [[dropStaged]] (also installed as a shutdown hook), so Verify/Bench
-  * runs cannot leak one corpus-sized table per query into the root.
+  * One way to reserve a staged dir: [[scoped]] gives a call a [[Scope]],
+  * and every dir the scope reserves is registered in a JVM-wide registry at
+  * once, so the end-of-run [[dropStaged]] drain (end of `Verify`/`Bench`,
+  * also a shutdown hook) covers a call that is stopped while it runs. Two
+  * lifetimes:
+  *  - call-scoped ([[Scope.temp]]): a staged INPUT or lineage cut that the
+  *    returned result never reads is deleted and unregistered when the call
+  *    returns or throws;
+  *  - end of run ([[Scope.result]]): a dir that a returned (lazy) result
+  *    reads is deleted if the call throws, and otherwise stays registered
+  *    until the drain, so a long-lived session keeps one such dir per call
+  *    until then.
   */
 object Staging {
 
@@ -28,9 +37,8 @@ object Staging {
       .getOrElse(spark.conf.get("spark.sql.warehouse.dir")
         .stripSuffix("/") + "/_graft_staging")
 
-  private val staged =
-    new java.util.concurrent.ConcurrentLinkedQueue[
-      (org.apache.hadoop.conf.Configuration, String)]()
+  private type Staged = (org.apache.hadoop.conf.Configuration, String)
+  private val staged = new java.util.concurrent.ConcurrentLinkedQueue[Staged]()
   private val hookInstalled = new java.util.concurrent.atomic.AtomicBoolean(false)
 
   private val caches = new java.util.concurrent.ConcurrentLinkedQueue[
@@ -56,56 +64,91 @@ object Staging {
     }
   }
 
-  /** Reserve (and register for reclamation) a fresh staged dir path under
-    * the resolved root. The caller writes to it; nothing is created here.
-    */
-  def newStagedDir(spark: SparkSession, prefix: String,
-      explicit: Option[String] = None): String = {
-    val p = root(spark, explicit) + "/" + prefix + "-" +
+  private def freshPath(spark: SparkSession, prefix: String,
+      explicit: Option[String]): String =
+    root(spark, explicit) + "/" + prefix + "-" +
       java.util.UUID.randomUUID().toString
-    register(spark, p)
-    p
-  }
 
-  /** Track an already-chosen staged path for later [[dropStaged]]. */
-  def register(spark: SparkSession, path: String): Unit = {
-    staged.add((spark.sparkContext.hadoopConfiguration, path))
+  private def register(spark: SparkSession, path: String): Staged = {
+    val e = (spark.sparkContext.hadoopConfiguration, path)
+    staged.add(e)
     if (hookInstalled.compareAndSet(false, true))
       Runtime.getRuntime.addShutdownHook(new Thread(() => dropStaged()))
+    e
+  }
+
+  /** Recursive delete; a NonFatal failure is logged and reported as false
+    * (an InterruptedException or VM error is not eaten by cleanup).
+    */
+  private def delete(conf: org.apache.hadoop.conf.Configuration,
+      path: String): Boolean =
+    try {
+      val p = new org.apache.hadoop.fs.Path(path)
+      p.getFileSystem(conf).delete(p, true)
+      true
+    } catch {
+      case NonFatal(ex) =>
+        System.err.println(s"[graft-staging] failed to delete $path: $ex")
+        false
+    }
+
+  /** The dirs one [[scoped]] call reserved, each registered as it is
+    * reserved. Not thread-safe: reserve from the calling thread.
+    */
+  final class Scope private[Staging] (spark: SparkSession,
+      explicit: Option[String]) {
+    private[Staging] val temps = scala.collection.mutable.ArrayBuffer.empty[Staged]
+    private[Staging] val results = scala.collection.mutable.ArrayBuffer.empty[Staged]
+
+    private def reserve(prefix: String,
+        into: scala.collection.mutable.ArrayBuffer[Staged]): String = {
+      val e = register(spark, freshPath(spark, prefix, explicit))
+      into += e
+      e._2
+    }
+
+    /** A fresh dir for something the returned result never reads (a staged
+      * input, a lineage cut): deleted when the scope ends, however it ends.
+      */
+    def temp(prefix: String): String = reserve(prefix, temps)
+
+    /** A fresh dir that the returned result reads: left registered for the
+      * end-of-run [[dropStaged]] drain if the scope returns, deleted like a
+      * [[temp]] if it throws (there is no result to read it).
+      */
+    def result(prefix: String): String = reserve(prefix, results)
+  }
+
+  /** Run `f` with a call-scoped [[Scope]] (dirs under
+    * `root(spark, explicit)`) and release its dirs in a `finally`. A dir
+    * that fails to delete stays registered, so the end-of-run drain
+    * retries it.
+    */
+  def scoped[T](spark: SparkSession, explicit: Option[String] = None)(
+      f: Scope => T): T = {
+    val s = new Scope(spark, explicit)
+    var ok = false
+    try { val r = f(s); ok = true; r }
+    finally
+      (if (ok) s.temps else s.temps ++ s.results).foreach { e =>
+        if (delete(e._1, e._2)) staged.remove(e): Unit
+      }
   }
 
   /** Delete the staged dirs this JVM registered. `under` scopes deletion
     * to staged dirs below one root (leaving other callers' staged tables
-    * alive, e.g. concurrently running test suites); `prefix` scopes it to
-    * one component's dirs by [[newStagedDir]] prefix (so e.g. dedup
-    * cleanup cannot delete a streaming changelog whose DataFrame is still
-    * lazy — the registry is JVM-wide across operators). A dir that fails
-    * to delete is logged and RE-QUEUED so a later call can retry — only
-    * NonFatal failures are swallowed (an InterruptedException or VM error
-    * must not be eaten by cleanup).
+    * alive, e.g. concurrently running test suites). A dir that fails to
+    * delete is RE-QUEUED so a later call can retry.
     */
-  def dropStaged(under: Option[String] = None,
-      prefix: Option[String] = None): Unit = {
+  def dropStaged(under: Option[String] = None): Unit = {
     // the unscoped call is the end-of-run drain: release registered
-    // caches too (scoped calls leave them — their consumers may be lazy)
-    if (under.isEmpty && prefix.isEmpty) releaseCaches()
-    val keep = new java.util.ArrayList[
-      (org.apache.hadoop.conf.Configuration, String)]()
+    // caches too (an `under` call leaves them — their consumers may be lazy)
+    if (under.isEmpty) releaseCaches()
+    val keep = new java.util.ArrayList[Staged]()
     var e = staged.poll()
     while (e != null) {
-      val base = e._2.substring(e._2.lastIndexOf('/') + 1)
-      if (under.forall(u => e._2.startsWith(u)) &&
-          prefix.forall(p => base.startsWith(p + "-"))) {
-        try {
-          val p = new org.apache.hadoop.fs.Path(e._2)
-          p.getFileSystem(e._1).delete(p, true): Unit
-        } catch {
-          case NonFatal(ex) =>
-            System.err.println(
-              s"[graft-staging] failed to delete ${e._2}: $ex (will retry)")
-            keep.add(e)
-        }
-      } else keep.add(e)
+      if (!under.forall(u => e._2.startsWith(u)) || !delete(e._1, e._2))
+        keep.add(e)
       e = staged.poll()
     }
     staged.addAll(keep): Unit

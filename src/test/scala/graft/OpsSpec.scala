@@ -342,9 +342,58 @@ class OpsSpec extends SparkSpec {
     val staged = new java.io.File(root).listFiles()
     assert(staged != null && staged.nonEmpty,
       "staging table must land under the explicit staging dir")
-    Dedup.dropStaged(under = Some(root))
+    graft.util.Staging.dropStaged(under = Some(root))
     val after = new java.io.File(root).listFiles()
     assert(after == null || after.isEmpty, "dropStaged must reclaim the staging dir")
+  }
+
+  test("a staged dir is registered for the drain as soon as a scope reserves it") {
+    val root = scratch("scope-registered")
+    graft.util.Staging.scoped(spark, Some(root)) { st =>
+      val dirs = Seq(st.temp("t"), st.result("r")).map(new java.io.File(_))
+      dirs.foreach(_.mkdirs())
+      // what the end-of-run drain (and its shutdown hook) does mid-call
+      graft.util.Staging.dropStaged(under = Some(root))
+      assert(dirs.forall(!_.exists), "a running call's dirs must be reclaimable")
+    }
+  }
+
+  test("dedup: a failed call releases what it persisted and staged") {
+    import org.apache.spark.sql.graftbridge.CacheProbe.cachedEntries
+    val before = cachedEntries(spark)
+    // a staging root below a regular file makes the result write fail
+    val file = java.nio.file.Files.createTempFile("graft-not-a-dir", ".txt")
+    intercept[Exception] {
+      Dedup.jaccardPairs(planted, "doc_id", "text", n = 3, threshold = 0.8,
+        stagingDir = Some(file.resolve("staging").toString))
+    }
+    assert(cachedEntries(spark) == before, "the shingle cache must be released")
+    // a 20-node path needs more than one round: clusters() fails after
+    // persisting edges and labels and writing a lineage cut
+    val root = scratch("dedup-cc-fail")
+    val ex = intercept[IllegalArgumentException] {
+      Dedup.clusters((0L until 20L).toSeq.toDF("id"), "id",
+        (1L until 20L).map(i => (i - 1, i)).toDF("a", "b"), maxRounds = 1,
+        checkpointEvery = 1, stagingDir = Some(root), smallGraphPairs = 0)
+    }
+    assert(ex.getMessage.contains("did not converge"))
+    assert(cachedEntries(spark) == before, "edges and labels must be released")
+    val staged = Option(new java.io.File(root).list()).toSeq.flatten
+    assert(staged.isEmpty, s"a failed call must leave no staged dir, got $staged")
+  }
+
+  test("clusters: the per-round lineage-cut dirs go when the call ends") {
+    val root = scratch("dedup-cc-stage")
+    val nodes = (0L until 20L).toSeq.toDF("id")
+    val pairs = (1L until 20L).map(i => (i - 1, i)).toDF("a", "b")
+    val got = Dedup.clusters(nodes, "id", pairs, checkpointEvery = 1,
+        stagingDir = Some(root), smallGraphPairs = 0)
+      .as[(Long, Long)].collect()
+    assert(got.length == 20 && got.forall(_._2 == 0L))
+    val staged = new java.io.File(root).list().toSeq
+    assert(staged.size == 1 && !staged.head.startsWith("dedup-cc-"),
+      s"only the staged result may remain, got $staged")
+    graft.util.Staging.dropStaged(under = Some(root))
   }
 
   test("minhash LSH + exact verification equals exact all-pairs jaccard") {

@@ -4,55 +4,20 @@ import graft.index._
 import graft.streaming.StreamingOps
 import org.apache.spark.sql.functions._
 
-/** Structured-Streaming ingest: micro-batches become committed LSM waves
-  * and the final index is logically identical to a batch build (the
-  * reference's push-stream + flush-watermark semantics, storage.rs:221-224).
+/** Structured-Streaming ingest and the bounded streaming operators:
+  * micro-batches become committed LSM waves and the final index is
+  * logically identical to a batch build (the reference's push-stream +
+  * flush-watermark semantics, storage.rs:221-224); q22/q31/q35 equal their
+  * batch formulations and release their staged inputs per call.
   */
 class StreamingSpec extends SparkSpec {
   import spark.implicits._
 
-  test("foreachBatch ingest == batch build (wave per micro-batch)") {
-    val docs = (0L until 300L).map { i =>
-      val words = (0 to (i % 7).toInt).map(j => s"w${(i + j) % 40}")
-      (i, s"k$i", words.mkString(" "))
-    }.toDF("docId", "key", "text")
-
-    // batch reference build
-    val batchDir = scratch("stream-batch")
-    IndexBuilder.build(spark, docs, batchDir, IndexOptions(docsPerSegment = 64))
-
-    // stream the same rows as 3 parquet files -> 3 micro-batches
-    val srcDir = java.nio.file.Files.createTempDirectory("graft-stream-in").toString
-    Seq(0L -> 100L, 100L -> 200L, 200L -> 300L).zipWithIndex.foreach {
-      case ((lo, hi), i) =>
-        docs.where(col("docId") >= lo && col("docId") < hi)
-          .coalesce(1).write.parquet(s"$srcDir/batch$i")
-    }
-    val streamDir = scratch("stream-idx")
-    val schema = spark.read.parquet(s"$srcDir/batch0").schema
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(s"$srcDir/batch*")
-    val q = StreamingOps.ingestStream(spark, stream, streamDir,
-      IndexOptions(docsPerSegment = 64))
-    q.processAllAvailable()
-    q.stop()
-
-    val mStream = ManifestIO.read(streamDir)
-    assert(mStream.totalDocs == 300)
-
-    def dump(dir: String) = new Searcher(spark, dir).segments
-      .select("term", "wave", "segId", "df", "tf", "maxTf", "blocks")
-      .as[SegmentPosting]
-      .flatMap { sp =>
-        val d = graft.codec.PostingCodec.decodeRun(sp.blocks.toSeq)
-        d.docIds.iterator.zip(d.tfs.iterator).map(p => (sp.term, p._1, p._2))
-      }.collect().toSet
-    assert(dump(streamDir) == dump(batchDir))
-  }
+  /** The sf0.001 events table the bounded operators run over. */
+  private val path = "/root/testdata/sf0.001/events.parquet"
 
   test("stateful streaming sessionization matches batch (closed sessions)") {
     import graft.ops.Sessionize
-    val path = "/root/testdata/sf0.001/events.parquet"
     val gap = Sessionize.DefaultGapSec
     val batchSessions = Sessionize.batch(spark.read.parquet(path))
       .collect().toSet
@@ -99,16 +64,7 @@ class StreamingSpec extends SparkSpec {
     .select(unix_timestamp(col("window.start")).as("ws"),
       col("event_type"), col("n"), col("total"))
 
-  test("windowed event counts equal the batch formulation (memory-sink helper)") {
-    val path = "/root/testdata/sf0.001/events.parquet"
-    val streamed = StreamingOps.windowedEventCounts(spark, path)
-    val batch = batchWindowed(path)
-    assert(streamed.count() == batch.count())
-    assert(streamed.except(batch).count() == 0)
-  }
-
   test("update-mode changelog sink (production q22 shape) equals batch") {
-    val path = "/root/testdata/sf0.001/events.parquet"
     val inc = StreamingOps.windowedEventCountsIncremental(spark, path)
     val batch = batchWindowed(path)
     assert(inc.count() == batch.count())
@@ -121,7 +77,6 @@ class StreamingSpec extends SparkSpec {
     // final row per key. In-order arrival + the 10-minute watermark on
     // 5-minute windows means no update ever lands on an evicted window, so
     // the compacted result equals the batch aggregation exactly.
-    val path = "/root/testdata/sf0.001/events.parquet"
     val ev = spark.read.parquet(path)
       .withColumn("sec", unix_timestamp(col("ts").cast("timestamp")))
     val (lo, hi) = ev.agg(min(col("sec")), max(col("sec")))
@@ -150,7 +105,6 @@ class StreamingSpec extends SparkSpec {
   test("empty events source yields an empty changelog result, not a schema error") {
     // no micro-batch ever writes: the pre-seeded empty changelog frame must
     // make the compaction read back an empty result with the right schema
-    val path = "/root/testdata/sf0.001/events.parquet"
     val emptyDir = scratch("inc-empty")
     spark.read.parquet(path).limit(0)
       .write.mode("overwrite").parquet(emptyDir)
@@ -163,7 +117,6 @@ class StreamingSpec extends SparkSpec {
     val root = scratch("stream-staging")
     spark.conf.set("spark.graft.stagingDir", root)
     try {
-      val path = "/root/testdata/sf0.001/events.parquet"
       val inc = StreamingOps.windowedEventCountsIncremental(spark, path)
       assert(inc.count() > 0)
       val staged = new java.io.File(root).listFiles()
@@ -205,7 +158,6 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("streaming dedup over an empty source yields an empty keyed result") {
-    val path = "/root/testdata/sf0.001/events.parquet"
     val emptyDir = scratch("dedup-empty")
     spark.read.parquet(path).limit(0)
       .write.mode("overwrite").parquet(emptyDir)
@@ -215,9 +167,54 @@ class StreamingSpec extends SparkSpec {
     assert(got.count() == 0)
   }
 
+  test("sessionizeComplete over an empty source yields an empty sessions frame") {
+    // guards the changelog seed, which is derived from the query's schema
+    val emptyDir = scratch("sess-empty")
+    spark.read.parquet(path).limit(0)
+      .write.mode("overwrite").parquet(emptyDir)
+    val got = StreamingOps.sessionizeComplete(spark, emptyDir)
+    assert(got.columns.toSeq == Seq("user_id", "sid", "n_events", "duration_sec"))
+    assert(got.count() == 0)
+  }
+
+  test("each bounded streaming call leaves only its changelog staged") {
+    // staged inputs (single-file source copy, sessionizeComplete's source
+    // and tmp dirs) are released when each call ends; the changelog the
+    // returned frame reads stays until the end-of-run drain
+    val root = scratch("stream-per-call")
+    spark.conf.set("spark.graft.stagingDir", root)
+    def staged: Seq[String] =
+      Option(new java.io.File(root).list()).toSeq.flatten
+    try {
+      for (_ <- 1 to 3) {
+        assert(StreamingOps.windowedEventCountsIncremental(spark, path)
+          .count() > 0)
+        assert(StreamingOps.distinctKeysIncremental(spark, path,
+          Seq("user_id", "event_type")).count() > 0)
+        assert(StreamingOps.sessionizeComplete(spark, path).count() > 0)
+      }
+      // "<prefix>-<36-char uuid>"
+      val prefixes = staged.map(n => n.dropRight(37)).sorted
+      assert(prefixes == Seq("stream-dedup", "stream-log", "stream-sess")
+        .flatMap(Seq.fill(3)(_)), staged.sorted)
+      graft.util.Staging.dropStaged(under = Some(root))
+      assert(staged.isEmpty)
+
+      // a call that fails after staging starts leaves nothing behind
+      val neg = scratch("sess-neguid-staged")
+      spark.read.parquet(path).limit(50)
+        .withColumn("user_id", (col("user_id") * -1 - 1).cast(
+          spark.read.parquet(path).schema("user_id").dataType))
+        .write.mode("overwrite").parquet(neg)
+      intercept[IllegalArgumentException] {
+        StreamingOps.sessionizeComplete(spark, neg)
+      }
+      assert(staged.isEmpty, staged)
+    } finally spark.conf.unset("spark.graft.stagingDir")
+  }
+
   test("sessionizeComplete drains every final session and equals batch exactly") {
     import graft.ops.Sessionize
-    val path = "/root/testdata/sf0.001/events.parquet"
     val batchSessions = Sessionize.batch(spark.read.parquet(path))
       .collect().toSet
     val streamed = StreamingOps.sessionizeComplete(spark, path)
@@ -230,7 +227,6 @@ class StreamingSpec extends SparkSpec {
 
   test("sessionizeComplete: multi-file batch 0 stays exact; negative ids fail loudly") {
     import graft.ops.Sessionize
-    val path = "/root/testdata/sf0.001/events.parquet"
     // round-6 staging shape: batch 0 keeps the source's partitioning (no
     // whole-corpus coalesce(1)) — exactness must hold when the corpus
     // spans MANY files admitted in one trigger
@@ -294,6 +290,25 @@ class StreamingSpec extends SparkSpec {
     }
     for (t <- Seq("shared", "tok0", "tok5", "tok12"))
       assert(urls(idxDir, t) == urls(batchDir, t), s"term $t")
+    // every term's full (url, tf) postings, duplicates included, equal the
+    // batch build's: one wave per micro-batch plus compaction loses nothing
+    def postings(dir: String): Seq[(String, String, Int)] = {
+      val s = new Searcher(spark, dir)
+      val keyOf = s.docMeta.select("docId", "key").as[(Long, String)]
+        .collect().toMap
+      s.segments
+        .select("term", "wave", "segId", "df", "tf", "maxTf", "blocks")
+        .as[SegmentPosting]
+        .flatMap { sp =>
+          val d = graft.codec.PostingCodec.decodeRun(sp.blocks.toSeq)
+          d.docIds.iterator.zip(d.tfs.iterator).map(p => (sp.term, p._1, p._2))
+        }.collect().toSeq
+        .map { case (t, id, tf) => (t, keyOf(id), tf) }.sorted
+    }
+    val streamed = postings(idxDir)
+    val terms = streamed.map(_._1).toSet
+    assert(("shared" +: (0 until 13).map(i => s"tok$i")).forall(terms), terms)
+    assert(streamed == postings(batchDir))
 
     // replay: batchIds at or below the committed mark no-op atomically
     val replay = spark.read.parquet(s"$srcDir/pg00.parquet")
